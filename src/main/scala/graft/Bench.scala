@@ -126,17 +126,25 @@ object Bench {
       factor: Double, loadGate: Double): Boolean =
     floor > 0.0 && steady > factor * floor && externalLoad > loadGate
 
-  /** JIT-warm the ingest decode+normalize path on sf0.001 so a
-    * following [[timedIngestEps]] measures steady-state cost, not
-    * first-execution codegen. Shared basis with
+  /** The warm-up scale directory: `sf0.001` beside `sfDir`, so warm-up
+    * reads follow the timed data's layout wherever it lives.
+    */
+  private[graft] def warmDir(sfDir: String): String = {
+    val p = new org.apache.hadoop.fs.Path(sfDir)
+    new org.apache.hadoop.fs.Path(p.getParent, "sf0.001").toString
+  }
+
+  /** JIT-warm the ingest decode+normalize path on the sf0.001 sibling
+    * of `sfDir` so a following [[timedIngestEps]] measures
+    * steady-state cost, not first-execution codegen. Shared basis with
     * [[graft.tools.EpsOnly]].
     */
-  def warmIngest(spark: SparkSession): Unit = {
+  def warmIngest(spark: SparkSession, sfDir: String): Unit = {
     import org.apache.spark.sql.functions._
     // ADVICE r21: warm the SAME plan shape timedIngestEps measures —
     // without the repartition the post-shuffle decode stage's
     // whole-stage codegen compiled inside the first timed rep.
-    val warm = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    val warm = spark.read.parquet(s"${warmDir(sfDir)}/events.parquet")
       .repartition(spark.sparkContext.defaultParallelism)
       .select(to_json(struct(col("*"))).as("value"))
     graft.streaming.IngestPipeline.runBatch(warm, graft.streaming.IngestPipeline.Logstash)
@@ -207,13 +215,13 @@ object Bench {
     // sf0.1 between a JVM's first and second run).
     Seq("q1_pricing_summary", "x_dedup_minhash").foreach { name =>
       SparkEntry.queries.get(name)
-        .foreach(fn => fn(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save())
+        .foreach(fn => fn(spark, warmDir(sfDir)).write.format("noop").mode("overwrite").save())
       graft.ext.Dedup.releaseCaches()
       spark.catalog.clearCache()
     }
     // Warm the ingest decode+normalize path too, so the pre-rep-1 EPS
     // measurement is steady-state JIT rather than first-execution cost.
-    warmIngest(spark)
+    warmIngest(spark, sfDir)
     // Deterministic order with the clusters-after-ngram keep-warm rule —
     // shared with Verify/TimeMany and name-asserted (SparkEntry).
     val ordered = SparkEntry.orderedQueryNames

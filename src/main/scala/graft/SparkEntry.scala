@@ -88,7 +88,7 @@ object SparkEntry {
     "x_dedup_exact"     -> (Dedup.exactProfile _),
     "x_dedup_ngram"     -> (Dedup.ngramJaccardPairs _),
     "x_dedup_minhash"   -> (Dedup.minhashLshPairs _),
-    "x_dedup_simhash"   -> (Dedup.simhashMd5Query _),       // md5-bit portable variant; xxhash64 fast path is spec-checked
+    "x_dedup_simhash"   -> (Dedup.simhashMd5Query _),       // md5-bit portable SimHash (hex fingerprint)
     "x_dedup_simhash_pairs" -> (Dedup.simhashPairsQuery _), // banded Hamming<=3 near-dup pairs over the fingerprints
     "x_dedup_simhash_clusters" -> (Dedup.simhashClusters _), // component labels over the banded Hamming pair graph
     "x_detector_overlap" -> (Dedup.detectorOverlap _), // jaccard-vs-simhash near-dup definition agreement matrix

@@ -76,7 +76,6 @@ object Tables {
     new scala.collection.concurrent.TrieMap[(String, String, Int, Long, Long), Boolean]()
   private def widen(spark: SparkSession, sfDir: String,
       table: String, df: DataFrame): DataFrame = {
-    if (sys.env.get("SPARK_GRAFT_WIDEN").contains("false")) return df
     if (!widenKeys.contains(table)) return df
     val p = spark.sparkContext.defaultParallelism
     val path = new org.apache.hadoop.fs.Path(s"$sfDir/$table.parquet")

@@ -1132,9 +1132,9 @@ object Corpus {
       .orderBy(col("doc_id"), col("chunk_id"))
 
   /** The gate projection without the presentation sort — THE shared
-    * face ([[chunkFrame]] discipline): the streaming twin
-    * ([[graft.streaming.EventsStream.chunkQualityStream]]) runs this
-    * exact expression, so stream and batch gate identical chunks.
+    * face ([[chunkFrame]] discipline): applied to a streaming frame it
+    * gates arriving documents row-locally with no state, so stream and
+    * batch gate identical chunks.
     */
   private[graft] def chunkQualityFor(docs: DataFrame,
       window: Int, stride: Int): DataFrame =

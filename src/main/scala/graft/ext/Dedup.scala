@@ -765,43 +765,14 @@ object Dedup {
     verifyPairs(cand, ds, 0.8).orderBy(col("d1"), col("d2"))
   }
 
-  /** SimHash (64-bit, xxhash64 token hashes): per-doc fingerprint whose
-    * Hamming distance tracks token-multiset similarity. Spark-only
-    * (bit-twiddling has no portable DuckDB twin) — rows-only check +
-    * ScalaTest. Scale: one narrow explode + two hash aggregates.
-    */
-  def simhash(docs: DataFrame): DataFrame = {
-    val tokens = docs.select(col("doc_id"),
-        explode(split(col("text"), " ")).as("tok"))
-      .filter(length(col("tok")) > 0)
-      .withColumn("h", xxhash64(col("tok")))
-    tokens
-      // literal-array explode + codegen'd bit test (not an interpreted
-      // transform lambda); partial sum folds 64× rows before shuffling
-      .withColumn("bit", explode(typedLit((0 until 64).toArray)))
-      .select(col("doc_id"), col("bit"),
-        when(expr("(h >> bit) % 2 != 0"), lit(1L)).otherwise(lit(-1L)).as("contrib"))
-      .groupBy(col("doc_id"), col("bit"))
-      .agg(sum(col("contrib")).as("s"))
-      .withColumn("bitval", when(col("s") > 0, lit(1L)).otherwise(lit(0L)))
-      .groupBy(col("doc_id"))
-      // bit_or, not sum: bit 63 is Long.MinValue and ANSI mode would
-      // reject the signed-overflow addition
-      .agg(expr("bit_or(shiftleft(bitval, bit))").as("simhash"))
-      .orderBy(col("doc_id"))
-  }
-
-  def simhashQuery(spark: SparkSession, dir: String): DataFrame =
-    simhash(Tables.documents(spark, dir))
-
   /** Engine-portable SimHash: token bits come from the md5 hex digest
     * (identical in DuckDB), and the 64-bit fingerprint is rendered as a
     * 16-char hex STRING — assembling it as a signed BIGINT would need
     * `1 << 63`, which DuckDB rejects as checked overflow while Spark
-    * wraps. Same majority-vote semantics as [[simhash]] (which stays as
-    * the fast path: one xxhash64 per token vs an md5 + hex-digit
-    * extraction here); this variant exists so the driver gate can
-    * hash-compare the fingerprints cross-engine instead of rows-only.
+    * wraps. Token hashes come from md5 rather than xxhash64 so the
+    * DuckDB oracle can hash-compare the fingerprints cross-engine
+    * instead of rows-only. Hamming distance between fingerprints
+    * tracks token-multiset similarity.
     *
     * Bit j of a token = bit (j%4) of hex digit (j div 4) of md5(tok).
     * Per doc: s_j = Σ over token OCCURRENCES of ±1 by that bit;

@@ -380,12 +380,12 @@ object Profiling {
     * at 100 TB the exact leg is the expensive one — the sketch is why
     * you would not run it.
     */
-  /** The HLL register aggregation shared by the batch report and the
-    * streaming twin ([[graft.streaming.EventsStream.hllRegisterStream]])
-    * — the same md5 bucket/rank projection and the same ≤64-row max
-    * aggregate, so the two sketches cannot drift; on a stream the max
-    * is the textbook bounded-state cardinality sketch (64 register
-    * rows of state, ever).
+  /** The HLL register aggregation, run as-is by the batch report and
+    * on a streaming frame — the same md5 bucket/rank projection and
+    * the same ≤64-row max aggregate, so the two sketches cannot drift;
+    * on a stream the max is the textbook bounded-state cardinality
+    * sketch (64 register rows of state, ever), and because `max` is
+    * idempotent a re-delivered micro-batch cannot corrupt it.
     */
   private[graft] def hllRegistersFor(docs: DataFrame): DataFrame =
     // the corpus-wide face IS the grouped face under one constant key
@@ -401,11 +401,10 @@ object Profiling {
     * it carries the exact distinct count beside the estimate so the
     * oracle can price the error — correct for correctness gating, but
     * its exact leg is the corpus-wide distinct aggregate the sketch
-    * exists to avoid. Registers built by [[hllRegistersFor]] (batch)
-    * or maintained by
-    * [[graft.streaming.EventsStream.hllRegisterStream]] (stream) read
-    * identically here: densify to m = 64 (absent bucket = register 0),
-    * then the integer-exact estimate — one ≤ 64-row job. Output: one
+    * exists to avoid. Registers built by [[hllRegistersFor]] on a
+    * batch or a streaming frame read identically here: densify to
+    * m = 64 (absent bucket = register 0), then the integer-exact
+    * estimate — one ≤ 64-row job. Output: one
     * row (r_max, n_zero, s_sum, raw_est, est).
     */
   /** Densify a (bucket, register) frame to all m = 64 buckets (absent
@@ -494,12 +493,14 @@ object Profiling {
     * the tiny broadcast top-10 key set), and the non-negative
     * overestimate.
     */
-  /** The sketch-cell aggregation shared by the batch report and the
-    * streaming twin ([[graft.streaming.EventsStream.countMinStream]])
-    * — the same row-local (row, col) projection and the same ≤d·w-cell
-    * aggregate, so the two sketches cannot drift; on a stream the
-    * aggregate is the textbook bounded-state streaming sketch
-    * (complete-mode cells, state capped at d·w by construction).
+  /** The sketch-cell aggregation, run as-is by the batch report and
+    * on a streaming frame — the same row-local (row, col) projection
+    * and the same ≤d·w-cell aggregate, so the two sketches cannot
+    * drift; on a stream the aggregate is the textbook bounded-state
+    * streaming sketch (complete-mode cells, state capped at d·w by
+    * construction). Cell counts are at-least-once sensitive: a
+    * replayed micro-batch adds again, so run behind an exactly-once
+    * source commit log.
     */
   private[graft] def cmCellsFor(docs: DataFrame, d: Int = 4, w: Int = 256): DataFrame =
     docs.select(explode(split(col("text"), " ")).as("token"))
@@ -520,8 +521,7 @@ object Profiling {
     * truth leg is a full token aggregate the sketch exists to avoid.
     * This face is one broadcast equi-join of |queries|·d rows against
     * ≤ d·w cells plus a d-way min — corpus never touched. Cells built
-    * by [[cmCellsFor]] (batch) or maintained by
-    * [[graft.streaming.EventsStream.countMinStream]] (stream) read
+    * by [[cmCellsFor]] on a batch or a streaming frame read
     * identically here; a key hitting an absent cell estimates 0 (the
     * sketch never saw it — CM's one-sided floor).
     */
@@ -601,11 +601,10 @@ object Profiling {
       .orderBy(col("tok"))
   }
 
-  /** The AMS sign-register aggregation shared by the batch F2 report
-    * and the streaming twin
-    * ([[graft.streaming.EventsStream.f2RegisterStream]]) — one
-    * definition, not a copy, so the two sketches cannot drift. Each of
-    * the `s` estimators draws its ±1 sign for a token from one hex
+  /** The AMS sign-register aggregation, run as-is by the batch F2
+    * report and on a streaming frame — one definition, so the two
+    * sketches cannot drift (like [[cmCellsFor]]'s counters, a replayed
+    * micro-batch adds again). Each of the `s` estimators draws its ±1 sign for a token from one hex
     * digit of md5(token) (digit i even → +1, odd → −1 — the same
     * disjoint-slices-of-ONE-digest idiom as [[cmCellsFor]]'s row
     * hashes, portable to the oracle via strpos arithmetic) and sums
@@ -799,9 +798,9 @@ object Profiling {
       .orderBy(col("est_i"))
   }
 
-  /** The md5 level draw shared by the batch quantile sketch and the
-    * streaming twin ([[graft.streaming.EventsStream.quantileLevelStream]])
-    * — one expression, not a copy, so the two sketches cannot drift.
+  /** The md5 level draw shared by the batch quantile sketch and
+    * [[quantileLevelHist]] on a streaming frame — one expression, not
+    * a copy, so the two sketches cannot drift.
     * Expects a string `qkey` column (the item's identity);
     * level = leading zeros of the first 32 hash bits (the
     * [[hllRegistersFor]] `32 − len(bin(w))` idiom, unpadded binary on
@@ -815,9 +814,8 @@ object Profiling {
       + " END AS BIGINT)")
 
   /** The per-key HLL register frame — the grouped twin of
-    * [[hllRegistersFor]], shared by the batch grouped estimate and
-    * [[graft.streaming.EventsStream.hllRegisterByKeyStream]]: tokens
-    * → (k, bucket, register) with the identical md5 bucket/rank
+    * [[hllRegistersFor]], run as-is by the batch grouped estimate and
+    * on a streaming frame: tokens → (k, bucket, register) with the identical md5 bucket/rank
     * projection and a per-(key, bucket) max — ≤ 64 register rows per
     * key out of any corpus, idempotent under replay like the
     * corpus-wide face.
@@ -835,7 +833,7 @@ object Profiling {
 
   /** The grouped Flajolet estimator over a standing (k, bucket,
     * register) frame — the production read path of
-    * [[graft.streaming.EventsStream.hllRegisterByKeyStream]], so a
+    * [[hllRegistersByKeyFor]] maintained on a stream, so a
     * deployment maintaining per-key registers has a callable
     * estimator instead of re-implementing the arithmetic (review r16
     * — the estimator-duplication drift VERDICT r15 #6 closed for the
@@ -910,8 +908,9 @@ object Profiling {
     * source, the `k` smallest 32-bit md5 values over its DISTINCT
     * 8-char shingle set (Bar-Yossef et al., RANDOM 2002; the Theta
     * sketch of the DataSketches line). Shared by the batch overlap
-    * report and the streaming twin so the two cannot drift. One
-    * explode → [[graft.functions.BottomKDistinct]] aggregate — the
+    * report and a streaming frame so the two cannot drift; the KMV
+    * insert is idempotent, so at-least-once replay cannot corrupt it.
+    * One explode → [[graft.functions.BottomKDistinct]] aggregate — the
     * duplicate-absorbing KMV insert, so there is NO corpus-wide
     * distinct shuffle anywhere on the sketch path and ≤ k rows per
     * (partition, source) cross the wire. State is k rows per source,
@@ -1256,9 +1255,9 @@ object Profiling {
     * verdict faces carry — union-sketch size, overlap, Jaccard micro,
     * and the two a-not-b partitions — off a STANDING (source, h)
     * sketch frame ALONE: no corpus access, no truth leg. The online
-    * face: a deployment maintaining sketches via
-    * [[graft.streaming.EventsStream.kmvSketchStream]] reads this per
-    * micro-batch (or on demand) for live cross-source overlap/diff;
+    * face: a deployment maintaining sketches via [[kmvSketchFor]] on
+    * a stream reads this per micro-batch (or on demand) for live
+    * cross-source overlap/diff;
     * cost is |sources|²·k rows by construction. Spec asserts the
     * stream-maintained report equals the batch verdict faces' sketch
     * columns after corpus replay.
@@ -1279,10 +1278,10 @@ object Profiling {
   def kmvReportFor(sk: DataFrame, k: Int = 64): DataFrame = {
     graft.functions.GraftFunctions.register(sk.sparkSession)
     // the truncation guard is an EAGER bounded aggregate (groupBy +
-    // head), legal only on a standing batch frame; a STREAMING frame —
-    // which kmvReportStream's signature invites — would throw
-    // AnalysisException at construction, so the guard applies only
-    // off-stream and the documented k-contract carries alone there
+    // head), legal only on a standing batch frame; a STREAMING frame
+    // would throw AnalysisException at construction, so the guard
+    // applies only off-stream and the documented k-contract carries
+    // alone there
     // (ADVICE r19). Batch callers (the verdict faces, the foreachBatch
     // read over the standing sink) keep the loud check.
     if (!sk.isStreaming) {
@@ -1365,15 +1364,22 @@ object Profiling {
       .orderBy(col("source_a"), col("source_b"))
   }
 
-  /** The level-histogram aggregation shared by the batch sketch and
-    * the streaming twin: items → (lvl, c) with map-side partials —
-    * ≤ 33 rows out of any corpus, mergeable across any partitioning
-    * (count sums are associative), which is what lets the sketch's
-    * level selection run on partial sketches unioned from anywhere.
+  /** The level-histogram aggregation over an already-leveled frame:
+    * (lvl) → (lvl, c) with map-side partials — ≤ 33 rows out of any
+    * corpus, mergeable across any partitioning (count sums are
+    * associative), which is what lets the sketch's level selection run
+    * on partial sketches unioned from anywhere.
+    */
+  private def levelHist(leveled: DataFrame): DataFrame =
+    leveled.groupBy(col("lvl")).agg(count(lit(1)).as("c"))
+
+  /** [[levelHist]] over items carrying a string `qkey` identity — the
+    * same histogram the batch sketch aggregates, run on a streaming
+    * frame. Counts are at-least-once sensitive: a replayed micro-batch
+    * drifts them upward, so run behind exactly-once sinks.
     */
   private[graft] def quantileLevelHist(items: DataFrame): DataFrame =
-    items.withColumn("lvl", qLevelCol)
-      .groupBy(col("lvl")).agg(count(lit(1)).as("c"))
+    levelHist(items.withColumn("lvl", qLevelCol))
 
   /** max(1, ⌈p·n/100⌉) in the truncating integer form both engines
     * share — ONE definition for the corpus-wide and grouped sketches
@@ -1413,10 +1419,9 @@ object Profiling {
     arr.map(r => -r.getDouble(0)).toIndexedSeq
 
   /** The per-key level histogram — the grouped twin of
-    * [[quantileLevelHist]], shared by the batch grouped sketch and
-    * [[graft.streaming.EventsStream.quantileLevelByKeyStream]]: items
-    * → (key, lvl, c) with map-side partials, ≤ 33 rows per key out of
-    * any corpus. Expects a string `k` key column beside `qkey`.
+    * [[quantileLevelHist]], run as-is by the batch grouped sketch and
+    * on a streaming frame: items → (key, lvl, c) with map-side
+    * partials, ≤ 33 rows per key out of any corpus. Expects a string `k` key column beside `qkey`.
     */
   private[graft] def quantileLevelHistByKey(items: DataFrame): DataFrame =
     items.withColumn("lvl", qLevelCol)
@@ -1594,7 +1599,7 @@ object Profiling {
     val lv = graft.ext.Dedup.trackPersist(
       li.withColumn("lvl", qLevelCol)
         .select(col("v"), col("rid"), col("lvl")).persist())
-    val histRows = lv.groupBy(col("lvl")).agg(count(lit(1)).as("c")).collect()
+    val histRows = levelHist(lv).collect()
     val byLvl: Map[Long, Long] =
       histRows.map(r => (r.getLong(0), r.getLong(1))).toMap
     val n = byLvl.values.sum
@@ -1640,10 +1645,6 @@ object Profiling {
     }
     spark.createDataFrame(rows).toDF(schema: _*).orderBy(col("pct"))
   }
-
-  // (the grouped sketch's streaming face lives in
-  // graft.streaming.EventsStream.quantileLevelByKeyStream, riding
-  // quantileLevelHistByKey — one definition, not a copy)
 
   /** Per-source (domain) corpus summary: document counts, exact-dup
     * ratio, average length. Group-by-domain is the unit crawl pipelines

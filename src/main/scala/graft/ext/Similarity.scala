@@ -310,9 +310,10 @@ object Similarity {
     * instead of 262,144 — already past it at the 10× probe point —
     * while the seed count stays √-bounded (4× the search schedule's:
     * ~3.9k seeds at n = 10⁹, the literal mechanism's edge; beyond
-    * that the recorded path is two-level seeding, not a bigger
-    * single-level K). Registered faces keep the oracle-pinned
-    * literal 16; production graph builds route through this.
+    * that [[seedAssigned]] runs the compiled
+    * [[graft.functions.NearestSeed]] kernel, linear in K). Registered
+    * faces keep the oracle-pinned literal 16; production graph builds
+    * route through this.
     */
   private[graft] def graphCellsFor(n: Long): Int = cellsFor(n, targetCellSize = 64L)
 
@@ -361,8 +362,7 @@ object Similarity {
         tables = Seq("embeddings.parquet")) {
       val e = Tables.embeddings(spark, dir)
       // past the single-level literal edge, the compiled kernel
-      // computes the IDENTICAL argmax (bit-equality spec-asserted;
-      // assignCells2L is the literal-mechanism fallback, also exact)
+      // computes the IDENTICAL argmax (bit-equality spec-asserted)
       // with O(1) generated code in K
       if (cells > SingleLevelCellEdge) assignCellsKernel(e, seedCentroids(e, cells))
       else assignCells(e, seedCentroids(e, cells))
@@ -397,63 +397,26 @@ object Similarity {
   }
 
   /** The single-level edge of the literal-inline seeding mechanism:
-    * the round-20 TimeSeed2L A/B (BASELINE.md) measured the
-    * block-decomposed form at-or-below the single-level form at every
-    * probed count (512: 18.5 vs 21.1 s cold; 1024: 37.6 vs 56.9;
-    * 2048: 105.3 vs 186.8 — the 10× corpus), with identical checksums.
-    * Both literal forms leave whole-stage codegen on this corpus (the
-    * 64 KB method limit), so [[seedAssigned]] routes through the
-    * compiled-kernel [[graft.functions.NearestSeed]] path beyond this
-    * edge — linear in K where the literal forms degrade superlinearly
-    * (the ADOPTED path; the idle A/B table in BASELINE.md) — with
-    * [[assignCells2L]] retained as the exact literal-mechanism
-    * fallback.
+    * BASELINE.md's "Round 20 seed-assignment A/B past the literal
+    * edge" table (10× corpus) measured the literal forms leaving
+    * whole-stage codegen on this corpus (the 64 KB method limit) and
+    * degrading superlinearly past it (single-level 17.5 s cold at 512
+    * cells, 35.3 at 1024, 132.5 at 2048), so [[seedAssigned]] routes
+    * through the compiled-kernel [[graft.functions.NearestSeed]] path
+    * beyond this edge — linear in K, identical checksums.
     */
   private[graft] val SingleLevelCellEdge = 512
-
-  /** TWO-LEVEL seed assignment (round 20, VERDICT r19 #1) — the
-    * documented-but-previously-unbuilt leg of the cell-growth story,
-    * for cell counts past [[SingleLevelCellEdge]]: split the K
-    * centroids into ⌈√K⌉ blocks of ≤⌈√K⌉ seeds, compute each block's
-    * best (−cos, cell_id) winner with its OWN bounded literal
-    * expression (level 1), then argmax over the ⌈√K⌉ block winners
-    * (level 2). Exactness is by ASSOCIATIVITY of min under the
-    * (−cos asc, cell_id asc) struct order — min over K candidates =
-    * min over blocks of per-block mins — so 2L ≡ 1L at EVERY corpus
-    * and cell count (spec-asserted), unlike a coarse-probe hierarchy
-    * that can route a row to the wrong block. Per-row work stays K
-    * rounded cosines (an exact argmax must examine every candidate),
-    * but no single expression inlines more than ⌈√K⌉×dim literals —
-    * at the n = 10⁹ graph schedule (K ≈ 62k under the 2L edge-free
-    * law) each block is ~250 seeds, squarely inside the measured
-    * healthy range. Still zero-shuffle, row-local assignment.
-    *
-    * The nprobe PROBE-LIST faces (the `slice(array_sort(...))` rank
-    * arrays) keep the single-level mechanism: every registered probe
-    * face pins cells ≤ 16 for its oracle, and a probe LIST (not an
-    * argmax) has no block decomposition — a deployment growing probes
-    * past the edge would band them per block and merge, the same
-    * associativity argument applied to top-nprobe.
-    */
-  private[graft] def assignCells2L(df: DataFrame, centroids: Array[(Long, Array[Float])]): DataFrame = {
-    val b = math.max(1, math.ceil(math.sqrt(centroids.length.toDouble)).toInt)
-    val blockMins = centroids.grouped(b).map(blk => array_min(cellScoreArray(blk))).toSeq
-    df.withColumn("best_cell", array_min(array(blockMins: _*)))
-      .withColumn("cell_id", col("best_cell").getField("cell_id"))
-      .withColumn("cos_centroid", -col("best_cell").getField("neg_cos"))
-      .drop("best_cell")
-  }
 
   /** The COMPILED-KERNEL assignment (round 20) — the adopted path past
     * [[SingleLevelCellEdge]]: one [[graft.functions.NearestSeed]]
     * expression carrying the centroid matrix as a reference object, so
     * generated code is O(1) in K and the kernel stays compiled at any
-    * cell count (TimeSeed2L, 10× corpus: 2048 cells in 3-class seconds
-    * where the literal forms run interpreted in the hundreds — the
-    * measured table in BASELINE.md). Bit-equal to [[assignCells]] by
-    * the kernel's arithmetic contract (CosineSim accumulation, Spark
-    * round-6, SQL double total order, smaller-id ties) — spec-asserted
-    * alongside the 2L associativity equivalence.
+    * cell count (10× corpus: 2048 cells in ~21 s where the literal
+    * forms run interpreted past 100 s — BASELINE.md's
+    * "Round 20 seed-assignment A/B past the literal edge" table).
+    * Bit-equal to [[assignCells]] by the kernel's arithmetic contract
+    * (CosineSim accumulation, Spark round-6, SQL double total order,
+    * smaller-id ties) — spec-asserted.
     */
   private[graft] def assignCellsKernel(df: DataFrame, centroids: Array[(Long, Array[Float])]): DataFrame = {
     graft.functions.GraftFunctions.register(df.sparkSession)
@@ -1095,13 +1058,13 @@ object Similarity {
   }
 
   /** Row-local IVF-PQ INDEXING of a vector frame against a standing
-    * index's literal artifacts — the shared face behind
-    * [[graft.streaming.EventsStream.annIndexStream]] and the spec's
-    * batch-agreement assertion: assign the coarse cell (literal
-    * centroid argmax), form the residual, encode the residual against
-    * the literal trained books, and report the per-row ADC
-    * quantization error. Pure projection: no state, no shuffle, no
-    * join — exactly what FAISS `IndexIVFPQ::add` does per vector.
+    * index's literal artifacts — the streaming ANN router (this def on
+    * a streaming frame) and the spec's batch-agreement assertion:
+    * assign the coarse cell (literal centroid argmax), form the
+    * residual, encode the residual against the literal trained books,
+    * and report the per-row ADC quantization error. Pure projection: no
+    * state, no shuffle, no join — exactly what FAISS `IndexIVFPQ::add`
+    * does per vector.
     */
   private[graft] def annEncodeFor(vectors: DataFrame,
       centroids: Array[(Long, Array[Float])],
@@ -1300,7 +1263,7 @@ object Similarity {
     * artifact is bounded (ksub·dim floats + m·ksub·sub doubles) and
     * deterministic (integer micro-unit means), so the search face
     * (`x_sim_ivf_pq`), its nprobe face (`x_sim_ivf_pq_probe`), and
-    * the streaming router (`annIndexStream`'s literal books) share ONE
+    * the streaming router ([[annEncodeFor]]'s literal books) share ONE
     * `iters`-iteration Lloyd's run per (session, corpus) instead of
     * each paying the 2-iteration join+aggregate+collect loop
     * (measured r15: 4.74 + 4.58 s for two identical trainings).

@@ -154,8 +154,8 @@ object TextAnalysis {
 
   /** The per-document rule flags — the row-local projection shared by
     * the batch report ([[gopherRulesFor]]) and the streaming router
-    * ([[graft.streaming.EventsStream.gopherRouteStream]]), so the two
-    * faces cannot drift (the chunkQualityFor convention). Input needs
+    * (this def on a streaming frame, no state), so the two faces
+    * cannot drift (the chunkQualityFor convention). Input needs
     * (doc_id, source, text); output keeps the ids for routing.
     */
   private[graft] def gopherFlagsFor(docs: DataFrame): DataFrame = {
@@ -377,8 +377,7 @@ object TextAnalysis {
 
   /** The per-DOC marker scores + argmax shared by [[langScores]] (the
     * per-doc face), [[langConfusion]] (the corpus-level verdict), and
-    * the streaming router
-    * ([[graft.streaming.EventsStream.langRouteStream]]) — composed
+    * the streaming router (this def on a streaming frame) — composed
     * from [[langScoreCols]]/[[langArgmaxCol]], the same expressions
     * the line-level [[langSegments]] applies per line.
     */
@@ -718,11 +717,11 @@ object TextAnalysis {
   }
 
   /** LABEL-FREE trained routing over raw (doc_id, text) — the
-    * streaming router's core ([[graft.streaming.EventsStream
-    * .langRouteTrainedFor]]): features, scores, and argmax are the
-    * trained faces' own expressions under literal weights; no `lang`
-    * column is required or read, so it runs at the ingest door before
-    * any labeling exists.
+    * streaming router: features, scores, and argmax are the trained
+    * faces' own expressions under literal weights; no `lang` column is
+    * required or read, so it runs at the ingest door before any
+    * labeling exists. The hashed-bigram features need one per-doc
+    * aggregate, so on a stream it runs as a `foreachBatch` body.
     */
   private[graft] def langRouteFor(docs: DataFrame,
       w: Map[String, Array[Long]]): DataFrame =
@@ -2119,7 +2118,9 @@ object TextAnalysis {
     * 100 TB shape: three unionByName + re-aggregate shuffles keyed by
     * the same (lang, gram) keys the tables already use, plus the
     * |langs|-row stats aggregate — the standing corpus is never
-    * re-scanned.
+    * re-scanned. On a stream it is a `foreachBatch` body merging each
+    * micro-batch into the standing model; recompute the perplexity
+    * router's band boundaries afterwards on the pipeline's own cadence.
     */
   private[graft] def lmLangMerge(standing: LmLangModel, arriving: DataFrame): LmLangModel =
     lmLangMergeCounts(standing.c2, standing.c1, standing.cu, arriving)

@@ -11,9 +11,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * generated code is O(1) in K — the centroid matrix rides along as a
   * REFERENCE OBJECT (`ctx.addReferenceObj`), never as literal
   * expression nodes, so the kernel compiles at any K where the
-  * literal-inline `cellScoreArray` form (round-20 TimeSeed2L: out of
-  * whole-stage codegen at 512 cells already, 64 KB-degraded fallback
-  * past 1k) cannot.
+  * literal-inline `cellScoreArray` form (BASELINE.md, "Round 20
+  * seed-assignment A/B past the literal edge": out of whole-stage
+  * codegen at 512 cells already, 64 KB-degraded fallback past 1k)
+  * cannot.
   *
   * Bit-equivalence contract with the literal form (spec-asserted):
   *   - per-candidate cosine is [[CosineSim]]'s exact accumulation

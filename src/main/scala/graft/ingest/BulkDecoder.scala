@@ -3,8 +3,6 @@ package graft.ingest
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.schema.LogsSchema
-
 /** Elasticsearch Bulk NDJSON framing (SURVEY.md §2A P1–P2).
   *
   * The reference splits the body on newlines, pairs action/document
@@ -39,9 +37,12 @@ object BulkDecoder {
 
   /** Parseable as a JSON object? (garbage lines are dropped, matching
     * main.go:322-324 — unmarshal failure → skip, no error surfaced).
+    * `json_object_keys` is NULL for malformed JSON and for non-objects;
+    * `from_json` is not a usable test, because PERMISSIVE mode returns
+    * a non-null struct for a truncated object.
     */
   def isParseableObject(c: Column): Column =
-    from_json(c, LogsSchema.eventSchema).isNotNull && trim(c).startsWith("{")
+    trim(c).startsWith("{") && json_object_keys(c).isNotNull
 
   /** NDJSON bulk body → one document line per row.
     * P1 (blank skip, main.go:269-271) + P2 (action discard + naked-doc

@@ -4,8 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StringType}
 
-import graft.schema.LogsSchema
-
 /** Non-bulk ingestion entry points (SURVEY.md §2A S2–S4).
   *
   * The reference accepts: a JSON array of events (`POST /events`,
@@ -34,8 +32,7 @@ object EventParser {
     */
   def parseSingle(payloads: DataFrame, column: String = "value"): DataFrame =
     payloads
-      .filter(trim(col(column)).startsWith("{"))
-      .filter(from_json(col(column), LogsSchema.eventSchema).isNotNull)
+      .filter(BulkDecoder.isParseableObject(col(column)))
       .select(col(column).as("value"))
 
   /** S4 — Logstash-HTTP fallback chain: array ⇒ explode; object ⇒ as-is

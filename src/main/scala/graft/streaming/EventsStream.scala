@@ -14,7 +14,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Every transform here is a pure Dataset function usable on both a
   * streaming and a batch frame (Spark's unified API), so the specs
-  * cross-check streaming output against the batch twin.
+  * cross-check streaming output against the batch twin. For the same
+  * reason an operator whose streaming face would only forward to its
+  * batch definition has no entry here: the row-local projections and
+  * sketch aggregations in `graft.ext` (e.g.
+  * [[graft.ext.Profiling.cmCellsFor]],
+  * [[graft.ext.Similarity.assignCells]]) run on the streaming frame
+  * directly.
   */
 object EventsStream {
 
@@ -874,133 +880,21 @@ object EventsStream {
         expr("CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 4), 16, 10) AS BIGINT)"))
   }
 
-  /** Streaming chunk-quality gate — the online face of
-    * [[graft.ext.Corpus.chunkQuality]]: arriving documents chunk and
-    * gate ROW-LOCALLY with the exact batch projection
-    * ([[graft.ext.Corpus.chunkQualityFor]] — not a copy, the same
-    * expression), so a RAG ingest path can drop junk chunks (padded
-    * tails, token-repetition runs) before embedding them. No state,
-    * no shuffle, no join — the [[dsirScoreStream]] shape; verdicts
-    * are bit-identical to the batch face by construction and the
-    * batch-agreement spec asserts it row-level.
-    */
-  def chunkQualityStream(docs: DataFrame,
-      window: Int = 64, stride: Int = 48): DataFrame =
-    graft.ext.Corpus.chunkQualityFor(docs, window, stride)
-
-  /** Streaming Gopher-gate router (round 15) — the online face of
-    * [[graft.ext.TextAnalysis.gopherRules]]: arriving documents
-    * evaluate the five integer-exact rule flags ROW-LOCALLY with the
-    * exact batch projection ([[graft.ext.TextAnalysis.gopherFlagsFor]]
-    * — the same expression, not a copy), so an ingest path drops
-    * rule-failing documents at the door instead of discovering them in
-    * the nightly per-source report. No state, no shuffle, no join —
-    * the [[chunkQualityStream]] shape; verdicts are bit-identical to
-    * the batch face by construction and the batch-agreement spec
-    * asserts it row-level.
-    */
-  def gopherRouteStream(docs: DataFrame): DataFrame =
-    graft.ext.TextAnalysis.gopherFlagsFor(docs)
-
-  /** Streaming Count-Min sketch (round 15) — the online face of
-    * [[graft.ext.Profiling.countMin]] and the algorithm's NATIVE
-    * habitat: arriving documents explode their (row, col) increments
-    * ROW-LOCALLY with the exact batch projection
-    * ([[graft.ext.Profiling.cmCellsFor]] — the same expression, not a
-    * copy) and a streaming aggregation maintains the sketch cells —
-    * state bounded at d·w = 1024 rows BY CONSTRUCTION, the strictest
-    * bounded-state story any streaming aggregate here has (the sketch
-    * exists precisely so frequency state never grows with the
-    * stream). Run with complete/update output; point queries read
-    * `min` over a token's d cells at any time, with the same
-    * one-sided est ≥ true guarantee the batch face hash-gates. Batch
-    * agreement is exact (count sums are associative): asserted
-    * cell-for-cell in spec after replaying the corpus.
-    */
-  def countMinStream(docs: DataFrame, d: Int = 4, w: Int = 256): DataFrame =
-    graft.ext.Profiling.cmCellsFor(docs, d, w)
-
-  /** Streaming HyperLogLog registers (round 15) — the cardinality
-    * companion to [[countMinStream]], same contract: arriving
-    * documents project their md5 bucket/rank ROW-LOCALLY with the
-    * exact batch expression ([[graft.ext.Profiling.hllRegistersFor]])
-    * and a streaming `max` aggregation maintains the 64 registers —
-    * 64 rows of state EVER, the reason HLL is the universal
-    * live-cardinality counter. `max` is idempotent and associative, so
-    * re-delivered micro-batches cannot corrupt the sketch (at-least-
-    * once safe for free, unlike a counter). Downstream reads apply the
-    * batch face's estimate formula to the current registers; batch
-    * agreement is asserted register-for-register in spec.
-    */
-  def hllRegisterStream(docs: DataFrame): DataFrame =
-    graft.ext.Profiling.hllRegistersFor(docs)
-
-  /** Streaming AMS F2 sign registers (round 17) — the skew/self-join-
-    * size companion to [[countMinStream]], same contract: arriving
-    * documents project their s = 16 ±1 md5-digit signs ROW-LOCALLY
-    * with the exact batch expression
-    * ([[graft.ext.Profiling.f2RegistersFor]] — one definition, not a
-    * copy) and a streaming `sum` aggregation maintains the sign sums
-    * — s rows of state EVER, the tightest bound of any sketch here.
-    * Sums are associative so shard/micro-batch merges are exact
-    * (batch agreement asserted register-for-register in spec), with
-    * the same at-least-once caveat as any counter ([[countMinStream]]
-    * included): a REPLAYED batch adds again — run behind the
-    * exactly-once file/Kafka source commit log, not a raw socket.
-    * Downstream reads apply [[graft.ext.Profiling.f2EstimateFor]] to
-    * the current registers.
-    */
-  def f2RegisterStream(docs: DataFrame, s: Int = 16): DataFrame =
-    graft.ext.Profiling.f2RegistersFor(docs, s)
-
-  /** Streaming KMV bottom-k sketch (round 16) — the set-overlap
-    * companion to [[hllRegisterStream]], same contract: arriving
-    * documents project their 8-char shingle md5 hashes ROW-LOCALLY
-    * with the exact batch expression
-    * ([[graft.ext.Profiling.kmvSketchFor]] — one definition, not a
-    * copy) and a streaming [[graft.functions.BottomKDistinct]]
-    * aggregation maintains the k smallest distinct hashes per source
-    * — k rows of state per source, EVER. The KMV insert is idempotent
-    * (a re-delivered hash is already present or already above the
-    * k-th minimum), so at-least-once replay cannot corrupt the sketch
-    * — the same safety class as HLL's register max, unlike a counter.
-    * Downstream reads estimate pairwise source overlap from the
-    * standing sketches with the batch face's estimator; batch
-    * agreement is asserted hash-for-hash in spec.
-    */
-  def kmvSketchStream(docs: DataFrame, k: Int = 64): DataFrame =
-    graft.ext.Profiling.kmvSketchFor(docs, k)
-
-  /** Streaming KMV READS (round 18 — VERDICT r17 #6): the
-    * [[kmvSketchStream]] maintains the k-row-per-source state; this
-    * is the report a deployment runs against that STANDING state per
-    * micro-batch — pairwise union-sketch size, overlap, Jaccard, and
-    * both a-not-b partitions, straight off the sketch rows with no
-    * corpus access (the [[f2RegisterByKeyStream]] pattern: maintain
-    * registers online, read with the batch arithmetic —
-    * [[graft.ext.Profiling.kmvReportFor]], one definition, not a
-    * copy). Run inside `foreachBatch` over the in-memory/complete
-    * sink holding the sketch, or on demand; spec asserts the
-    * stream-maintained report equals the batch verdict faces' sketch
-    * columns after full corpus replay.
-    */
-  def kmvReportStream(sk: DataFrame, k: Int = 64): DataFrame =
-    graft.ext.Profiling.kmvReportFor(sk, k)
-
   /** Streaming FUNNEL (round 19 — VERDICT r18 #6): the online face of
     * [[graft.ext.Dedup.filterFunnel]], the one big verdict family that
     * had no twin. Arriving doc ids join the STANDING per-doc gate
     * verdict frame (the nightly [[graft.ext.Dedup.funnelGateFrame]]
-    * output, published as a table — the [[langRouteTrainedFor]]
-    * frozen-artifact pattern: the batch job trains/derives, the stream
-    * reads), then the EXACT batch first-fail arithmetic
-    * ([[graft.ext.Dedup.funnelStageCounts]] — one definition, not a
-    * copy) counts survivors per gate across everything ingested so
-    * far: a stream–static LEFT join (stateless) into the single
-    * complete-mode aggregation, ≤7 rows of state EVER. The ingest
-    * path reports survivors-per-gate online instead of waiting for
-    * the nightly funnel; spec asserts the streamed counts equal the
-    * batch funnel's `n_surviving` column after full corpus replay.
+    * output, published as a table — the frozen-artifact pattern of
+    * [[graft.ext.TextAnalysis.langRouteFor]]: the batch job
+    * trains/derives, the stream reads), then the EXACT batch first-fail
+    * arithmetic ([[graft.ext.Dedup.funnelStageCounts]] — one
+    * definition, not a copy) counts survivors per gate across
+    * everything ingested so far: a stream–static LEFT join (stateless)
+    * into the single complete-mode aggregation, ≤7 rows of state EVER.
+    * The ingest path reports survivors-per-gate online instead of
+    * waiting for the nightly funnel; spec asserts the streamed counts
+    * equal the batch funnel's `n_surviving` column after full corpus
+    * replay.
     *
     * Stale-gate surfacing (ADVICE r19): an arriving doc_id ABSENT
     * from the standing gate table (the nightly publish lagging
@@ -1030,8 +924,9 @@ object EventsStream {
     * of re-sampled nightly. Batch agreement is asserted row-for-row in
     * spec. Replay caveat: unlike the KMV/HLL sketches, TopKByScore
     * keeps duplicate ids, so a re-delivered document can enter the
-    * reservoir twice — at-least-once sensitive like [[countMinStream]];
-    * run with exactly-once sinks or dedup upstream.
+    * reservoir twice — at-least-once sensitive like
+    * [[graft.ext.Profiling.cmCellsFor]]'s counters; run with
+    * exactly-once sinks or dedup upstream.
     */
   def weightedSampleStream(docs: DataFrame, wQ: Array[Long], k: Int = 20): DataFrame = {
     require(wQ.length == 4, s"expected 4 trained weight micro-units, got ${wQ.length}")
@@ -1051,56 +946,6 @@ object EventsStream {
       .agg(graft.functions.GraftFunctions
         .topKByScore((-col("key_micro")).cast("double"), col("doc_id"), k).as("top"))
   }
-
-  /** Streaming quantile-sketch level histogram (round 16) — the
-    * quantile companion to [[countMinStream]]/[[hllRegisterStream]],
-    * same contract: arriving items (any frame with a string `qkey`
-    * identity column) draw their md5 promotion level ROW-LOCALLY with
-    * the exact batch expression
-    * ([[graft.ext.Profiling.quantileLevelHist]] — one expression, not
-    * a copy) and a streaming count aggregation maintains the ≤ 33-row
-    * level histogram — the part of the sketch whose j* selection and
-    * n estimate a reader needs at any moment. Count sums are
-    * associative, so the histogram merges across micro-batches exactly
-    * as the batch face's map-side partials do (the mergeability the
-    * ProfilingSpec asserts); like [[countMinStream]], counts are
-    * at-least-once sensitive under replay — run with exactly-once
-    * sinks or accept the documented upward drift. The value SAMPLE
-    * S_{j*} is maintained on the pipeline's own cadence by a
-    * foreachBatch body re-filtering `lvl ≥ j*` against the standing
-    * store (the [[lmModelMerge]] maintenance convention) — level
-    * draws never change, so a later j* raise only ever FILTERS the
-    * standing sample, never re-reads the stream.
-    */
-  def quantileLevelStream(items: DataFrame): DataFrame =
-    graft.ext.Profiling.quantileLevelHist(items)
-
-  /** Streaming grouped HLL registers (round 16) — the per-key face of
-    * [[hllRegisterStream]]: arriving documents project their md5
-    * bucket/rank ROW-LOCALLY with the exact batch expression
-    * ([[graft.ext.Profiling.hllRegistersByKeyFor]] — one definition,
-    * not a copy) and a streaming max maintains ≤ 64 register rows PER
-    * KEY — idempotent and associative, so at-least-once replay cannot
-    * corrupt any key's sketch. Downstream reads apply the grouped
-    * batch estimator to the standing registers.
-    */
-  def hllRegisterByKeyStream(docs: DataFrame): DataFrame =
-    graft.ext.Profiling.hllRegistersByKeyFor(docs)
-
-  /** Streaming grouped AMS F2 registers (round 17) — the per-key face
-    * of [[f2RegisterStream]]: arriving documents project their 16
-    * md5-digit signs ROW-LOCALLY with the exact batch expression
-    * ([[graft.ext.Profiling.f2RegistersByKeyFor]] — one definition,
-    * not a copy) and a streaming sum maintains ≤ s sign rows PER
-    * SOURCE. Same counter-class at-least-once caveat as the
-    * corpus-wide face; downstream reads price per-source skew (mean
-    * of Z²) or pairwise join size (mean of Za·Zb — the AGMS
-    * estimator) off the standing registers at any moment, which is
-    * the point: live equi-join cardinality between any two sources
-    * without either ever being re-scanned.
-    */
-  def f2RegisterByKeyStream(docs: DataFrame): DataFrame =
-    graft.ext.Profiling.f2RegistersByKeyFor(docs)
 
   /** Template-boilerplate router (round 17) — the at-the-door face of
     * the template family: arriving documents explode their lines with
@@ -1133,20 +978,6 @@ object EventsStream {
       .select(col("doc_id"), col("source"), col("n_lines"), col("n_template"),
         expr("n_template * 1000000 DIV n_lines").as("boilerplate_pct_micro"),
         (col("n_template") * 2 < col("n_lines")).as("keep"))
-
-  /** Streaming grouped quantile-level histogram (round 16) — the
-    * per-key face of [[quantileLevelStream]]: arriving items (string
-    * `k` key column + string `qkey` identity) draw their md5 level
-    * ROW-LOCALLY with the exact batch expression
-    * ([[graft.ext.Profiling.quantileLevelHistByKey]] — one
-    * definition, not a copy) and a streaming count aggregation
-    * maintains ≤ 33 level rows PER KEY — the state a reader needs to
-    * pick each key's j* and size its sample at any moment. Same
-    * at-least-once caveat as the corpus-wide face: counts drift
-    * upward under replay; run with exactly-once sinks.
-    */
-  def quantileLevelByKeyStream(items: DataFrame): DataFrame =
-    graft.ext.Profiling.quantileLevelHistByKey(items)
 
   /** Perplexity-band router (round 13; round 14: per-language model,
     * per-key joins) — the online face of
@@ -1196,94 +1027,6 @@ object EventsStream {
           .when(col("avg_nll") <= lookup(midMax), "middle")
           .otherwise("tail"))
   }
-
-  /** Streaming ANN index router (round 14) — the vector-search member
-    * of the at-the-door family (lang router, ppl router, BM25
-    * percolator): arriving vectors are indexed against the STANDING
-    * IVF-PQ artifacts exactly as FAISS `IndexIVFPQ::add` would —
-    * coarse cell via the literal centroid argmax
-    * ([[graft.ext.Similarity.assignCells]] is already stateless),
-    * residual formed against the literal centroid, PQ codes encoded
-    * against the literal TRAINED books
-    * ([[graft.ext.Similarity.pqResidualTrained]]'s artifacts, the
-    * dsirScoreStream bounded-artifact convention), plus the per-row
-    * ADC quantization error `q_err` — the routing diagnostic that
-    * flags vectors the standing books represent poorly (drifted
-    * embedding space → retrain trigger). Pure projection: zero
-    * streaming state, zero shuffle, zero join; batch-agreement is
-    * row-level BY CONSTRUCTION (the same encode kernel), asserted in
-    * StreamingSpec against `x_sim_ivf_pq`'s encoded frame.
-    */
-  def annIndexStream(vectors: DataFrame,
-      centroids: Array[(Long, Array[Float])],
-      books: Array[Array[Array[Double]]]): DataFrame =
-    graft.ext.Similarity.annEncodeFor(vectors, centroids, books)
-
-  /** Streaming k-means|| cell router (round 15) — the seeding family's
-    * at-the-door face: arriving vectors are assigned to the STANDING
-    * k-means|| seed set (the bounded artifact
-    * [[graft.ext.Similarity.kmeansParallelTrain]] memoizes) with the
-    * SAME [[graft.ext.Similarity.assignCells]] kernel every 16-cell
-    * face shares, so an ingest path can route a vector to its IVF
-    * cell before it ever touches the index — the `IndexIVF::add`
-    * coarse step, isolated. Pure projection over ≤k literal seeds:
-    * zero streaming state, zero shuffle, zero join; batch-agreement
-    * is row-level BY CONSTRUCTION (one kernel, not a copy), asserted
-    * in StreamingSpec against the batch assignment.
-    */
-  def kppRouteStream(vectors: DataFrame,
-      seeds: Array[(Long, Array[Float])]): DataFrame =
-    graft.ext.Similarity.assignCells(vectors, seeds)
-
-  /** Streaming LM maintenance (round 14) — the model-update face of
-    * the perplexity family: a foreachBatch body merges each
-    * micro-batch's count tables into the standing
-    * [[graft.ext.TextAnalysis.LmLangModel]] by sufficient-statistics
-    * union + re-aggregate, and the merged model IS the full retrain
-    * exactly (integer count sums commute — the theorem
-    * `x_lm_merge_incremental`'s oracle asserts cross-engine). This is
-    * what a static KenLM artifact cannot do: the router's model keeps
-    * up with the crawl without ever re-scanning the standing corpus.
-    * After a merge, recompute [[pplBandFor]]'s boundaries on the
-    * pipeline's own cadence (bands drift as the model absorbs text).
-    */
-  def lmModelMerge(standing: graft.ext.TextAnalysis.LmLangModel,
-      microBatch: DataFrame): graft.ext.TextAnalysis.LmLangModel =
-    graft.ext.TextAnalysis.lmLangMerge(standing, microBatch)
-
-  /** Streaming language router — the online face of the marker
-    * language-ID: arriving documents get the [[graft.ext.TextAnalysis]]
-    * marker scores + deterministic argmax ROW-LOCALLY (the exact
-    * batch projection, not a copy), so an ingest path can route docs
-    * to per-language pipelines (tokenizer choice, lang-specific
-    * quality models) at the door. `x_lang_confusion` prices this
-    * router's accuracy batch-side; the stream face only routes. No
-    * state, no shuffle — the [[dsirScoreStream]] shape; predictions
-    * are bit-identical to the batch face by construction.
-    */
-  def langRouteStream(docs: DataFrame): DataFrame =
-    graft.ext.TextAnalysis.langPredFor(docs)
-
-  /** Streaming TRAINED language router (round 18) — the trained twin
-    * of [[langRouteStream]], routing by the `x_lang_trained` model
-    * instead of the marker heuristic (which `x_lang_confusion` shows
-    * is structurally zh-blind). The batch-trained one-vs-rest weight
-    * vectors (5 x 11 integer micro-units via the value memo —
-    * `TextAnalysis.langWeights`) inline as literals, and the
-    * features/scores/argmax are THE batch expressions
-    * ([[graft.ext.TextAnalysis.langRouteFor]] — one definition, not a
-    * copy), so a routed doc's (z_*, predicted) is bit-identical to
-    * the batch face's row. LABEL-FREE: only (doc_id, text) is read —
-    * the router runs at the ingest door before any labeling exists.
-    * A `foreachBatch` body (the [[templateRouteFor]] convention): the
-    * hashed-bigram features need one per-doc aggregate, which is
-    * plain batch work inside the micro-batch — ZERO streaming state.
-    * Drift note: weights age as the corpus grows; re-train per batch
-    * epoch exactly as the DSIR ratio table is.
-    */
-  def langRouteTrainedFor(docs: DataFrame,
-      w: Map[String, Array[Long]]): DataFrame =
-    graft.ext.TextAnalysis.langRouteFor(docs, w)
 
   /** Streaming eval-burn monitor — the online face of
     * [[graft.ext.Corpus.evalLeakage]]: watch benchmark items burn AS

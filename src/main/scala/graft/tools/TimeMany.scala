@@ -1,7 +1,8 @@
 package graft.tools
 
 /** Dev tool: time several queries once each in one JVM (mirrors the
-  * bench loop, including cache clearing). Usage:
+  * bench loop, including cache clearing); repeat a name to time it
+  * again in the same JVM. Usage:
   *   runMain graft.tools.TimeMany <q1,q2,...> [sfDir]
   */
 object TimeMany {
@@ -12,7 +13,7 @@ object TimeMany {
     // low/high-core walls (round 22); default matches the bench's 32
     val spark = Smoke.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     // same warmup as Bench
-    graft.SparkEntry.queries("q1_pricing_summary")(spark, "/root/testdata/sf0.001")
+    graft.SparkEntry.queries("q1_pricing_summary")(spark, graft.Bench.warmDir(dir))
       .write.format("noop").mode("overwrite").save()
     names.foreach { q =>
       // same keep-warm rule as Bench: clusters/apply consume the pair

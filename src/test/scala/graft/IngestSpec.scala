@@ -24,7 +24,8 @@ class IngestSpec extends SparkSpec {
       """{"message":"b"}""",
       """garbage not json""",                   // unparseable → dropped
       """{"delete":null}""",                    // action with null body
-      """[1,2,3]"""                             // JSON but not an object → dropped
+      """[1,2,3]""",                            // JSON but not an object → dropped
+      """{"@timestamp":"2024-01-01T00:00:00Z","message":"truncated""" // truncated object → dropped
     ).toDF("value")
     val out = BulkDecoder.frameBulk(lines).as[String].collect().toSet
     assert(out == Set("""{"message":"a"}""", """{"message":"naked"}""", """{"message":"b"}"""))
@@ -139,7 +140,8 @@ class IngestSpec extends SparkSpec {
       """[{"message":"a1"},{"message":"a2"}]""",
       """{"message":"obj"}""",
       """nope""",
-      """42"""
+      """42""",
+      """{"@timestamp":"2024-01-01T00:00:00Z","message":"truncated"""
     ).toDF("value")
     val out = Normalize.normalize(EventParser.parseLogstash(payloads), ingestTs = fixedTs)
     assert(out.select("message").as[String].collect().toSet == Set("a1", "a2", "obj"))

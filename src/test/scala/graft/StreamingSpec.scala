@@ -1154,8 +1154,8 @@ class StreamingSpec extends SparkSpec {
     val docs = graft.Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"), col("text"))
     val standing = graft.ext.TextAnalysis.lmLangTable(docs.filter(col("doc_id") % 3 =!= 0))
-    val merged = graft.streaming.EventsStream
-      .lmModelMerge(standing, docs.filter(col("doc_id") % 3 === 0))
+    val merged = graft.ext.TextAnalysis
+      .lmLangMerge(standing, docs.filter(col("doc_id") % 3 === 0))
     val full = graft.ext.TextAnalysis.lmLangTable(docs)
     // sufficient statistics: V/T per language identical to the retrain
     assert(merged.stats == full.stats, s"per-lang stats diverge: ${merged.stats} vs ${full.stats}")
@@ -1172,7 +1172,7 @@ class StreamingSpec extends SparkSpec {
     // and scores under its OWN stats afterwards
     val alien = Seq((9001L, "qq", "zork bleem zork bleem zork"),
       (9002L, "qq", "bleem zork bleem zork bleem")).toDF("doc_id", "lang", "text")
-    val withAlien = graft.streaming.EventsStream.lmModelMerge(merged, alien)
+    val withAlien = graft.ext.TextAnalysis.lmLangMerge(merged, alien)
     assert(withAlien.stats.contains("qq"), "merged model must learn the new language")
     val alienScore = graft.ext.TextAnalysis
       .lmScoreUnder(alien, withAlien).select(col("avg_nll")).as[Double].collect()
@@ -1188,8 +1188,8 @@ class StreamingSpec extends SparkSpec {
     val batch = encBatch.select(col("vec_id"), col("cell_id"), col("rcodes"))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getSeq[Int](2).toSeq))).toMap
     // the foreachBatch body over one "arriving" micro-batch = the corpus
-    val routed = graft.streaming.EventsStream
-      .annIndexStream(e, centroids, books)
+    val routed = graft.ext.Similarity
+      .annEncodeFor(e, centroids, books)
       .select(col("vec_id"), col("cell_id"), col("rcodes"), col("q_err"))
       .collect()
     assert(routed.length == batch.size, "router must index every arrival")
@@ -1206,7 +1206,7 @@ class StreamingSpec extends SparkSpec {
     val dim = centroids.head._2.length
     val fresh = Seq((999999L, Array.tabulate(dim)(i => (i % 7 - 3).toFloat / 10f)))
       .toDF("vec_id", "embedding")
-    val out = graft.streaming.EventsStream.annIndexStream(fresh, centroids, books)
+    val out = graft.ext.Similarity.annEncodeFor(fresh, centroids, books)
       .select(col("cell_id"), col("rcodes"), col("q_err")).collect()
     assert(out.length == 1)
     assert(out.head.getLong(0) >= 0 && out.head.getLong(0) < 16)
@@ -1223,7 +1223,7 @@ class StreamingSpec extends SparkSpec {
       .select(col("vec_id"), col("cell_id"), col("cos_centroid"))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
     // the foreachBatch body over one "arriving" micro-batch = the corpus
-    val routed = graft.streaming.EventsStream.kppRouteStream(e, seeds)
+    val routed = graft.ext.Similarity.assignCells(e, seeds)
       .select(col("vec_id"), col("cell_id"), col("cos_centroid")).collect()
     assert(routed.length == batch.size, "router must place every arrival")
     routed.foreach { r =>
@@ -1238,7 +1238,7 @@ class StreamingSpec extends SparkSpec {
     val dim = seeds.head._2.length
     val fresh = Seq((999999L, Array.tabulate(dim)(i => (i % 5 - 2).toFloat / 10f)))
       .toDF("vec_id", "embedding")
-    val out = graft.streaming.EventsStream.kppRouteStream(fresh, seeds)
+    val out = graft.ext.Similarity.assignCells(fresh, seeds)
       .select(col("cell_id")).collect()
     assert(out.length == 1 && seedIds(out.head.getLong(0)))
     graft.ext.Dedup.releaseCaches()
@@ -1554,7 +1554,7 @@ class StreamingSpec extends SparkSpec {
     val docs = graft.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text")).as[(Long, String)].collect()
     val input = MemoryStream[(Long, String)](spark)
-    val q = EventsStream.chunkQualityStream(input.toDF().toDF("doc_id", "text"))
+    val q = graft.ext.Corpus.chunkQualityFor(input.toDF().toDF("doc_id", "text"), 64, 48)
       .writeStream.format("memory").queryName("chunkq_stream")
       .outputMode("append").start()
     docs.grouped(200).foreach { g => input.addData(g.toSeq: _*); q.processAllAvailable() }
@@ -1578,7 +1578,7 @@ class StreamingSpec extends SparkSpec {
       .select(col("doc_id"), col("source"), col("text"))
       .as[(Long, String, String)].collect()
     val input = MemoryStream[(Long, String, String)](spark)
-    val q = EventsStream.gopherRouteStream(
+    val q = graft.ext.TextAnalysis.gopherFlagsFor(
         input.toDF().toDF("doc_id", "source", "text"))
       .writeStream.format("memory").queryName("gopher_route")
       .outputMode("append").start()
@@ -1614,7 +1614,7 @@ class StreamingSpec extends SparkSpec {
     val docs = graft.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text")).as[(Long, String)].collect()
     val input = MemoryStream[(Long, String)](spark)
-    val q = EventsStream.countMinStream(input.toDF().toDF("doc_id", "text"))
+    val q = graft.ext.Profiling.cmCellsFor(input.toDF().toDF("doc_id", "text"))
       .writeStream.format("memory").queryName("cm_stream")
       .outputMode("complete").start()
     docs.grouped(100).foreach { g => input.addData(g.toSeq: _*); q.processAllAvailable() }
@@ -1637,7 +1637,7 @@ class StreamingSpec extends SparkSpec {
     val docs = graft.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text")).as[(Long, String)].collect()
     val input = MemoryStream[(Long, String)](spark)
-    val q = EventsStream.f2RegisterStream(input.toDF().toDF("doc_id", "text"))
+    val q = graft.ext.Profiling.f2RegistersFor(input.toDF().toDF("doc_id", "text"))
       .writeStream.format("memory").queryName("f2_stream")
       .outputMode("complete").start()
     docs.grouped(100).foreach { g => input.addData(g.toSeq: _*); q.processAllAvailable() }
@@ -1659,7 +1659,7 @@ class StreamingSpec extends SparkSpec {
     val docs = graft.Tables.documents(spark, dir)
       .select(col("source"), col("text")).as[(String, String)].collect()
     val input = MemoryStream[(String, String)](spark)
-    val q = EventsStream.f2RegisterByKeyStream(input.toDF().toDF("source", "text"))
+    val q = graft.ext.Profiling.f2RegistersByKeyFor(input.toDF().toDF("source", "text"))
       .writeStream.format("memory").queryName("f2k_stream")
       .outputMode("complete").start()
     docs.grouped(20).foreach { g => input.addData(g.toSeq: _*); q.processAllAvailable() }
@@ -1717,7 +1717,7 @@ class StreamingSpec extends SparkSpec {
     val w = graft.ext.TextAnalysis.langWeights(spark, dir)
     // LABEL-FREE: the router reads only (doc_id, text) — no lang column
     val docs = graft.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val routed = graft.streaming.EventsStream.langRouteTrainedFor(docs, w)
+    val routed = graft.ext.TextAnalysis.langRouteFor(docs, w)
       .select(col("doc_id"), col("predicted")).as[(Long, String)].collect().toMap
     // the router's predictions ARE the batch verdict face's (same
     // features, same literal weights, same argmax — one definition)
@@ -1726,8 +1726,8 @@ class StreamingSpec extends SparkSpec {
     assert(routed == batch, "router predictions must equal the batch trained face")
     // stateless: two disjoint half-batches route identically to the whole
     val halves = Seq(0, 1).flatMap { m =>
-      graft.streaming.EventsStream
-        .langRouteTrainedFor(docs.filter(col("doc_id") % 2 === m), w)
+      graft.ext.TextAnalysis
+        .langRouteFor(docs.filter(col("doc_id") % 2 === m), w)
         .select(col("doc_id"), col("predicted")).as[(Long, String)].collect()
     }.toMap
     graft.ext.Dedup.releaseCaches()
@@ -1739,7 +1739,7 @@ class StreamingSpec extends SparkSpec {
     val docs = graft.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text")).as[(Long, String)].collect()
     val input = MemoryStream[(Long, String)](spark)
-    val q = EventsStream.hllRegisterStream(input.toDF().toDF("doc_id", "text"))
+    val q = graft.ext.Profiling.hllRegistersFor(input.toDF().toDF("doc_id", "text"))
       .writeStream.format("memory").queryName("hll_stream")
       .outputMode("complete").start()
     docs.grouped(100).foreach { g => input.addData(g.toSeq: _*); q.processAllAvailable() }
@@ -1765,7 +1765,7 @@ class StreamingSpec extends SparkSpec {
         col("l_linenumber").cast("string")).as("qkey"))
       .as[String].collect()
     val input = MemoryStream[String](spark)
-    val q = EventsStream.quantileLevelStream(input.toDF().toDF("qkey"))
+    val q = graft.ext.Profiling.quantileLevelHist(input.toDF().toDF("qkey"))
       .writeStream.format("memory").queryName("qlvl_stream")
       .outputMode("complete").start()
     keys.grouped(1000).foreach { g => input.addData(g.toSeq: _*); q.processAllAvailable() }
@@ -1789,7 +1789,7 @@ class StreamingSpec extends SparkSpec {
     val docs = graft.Tables.documents(spark, dir)
       .select(col("lang"), col("text")).as[(String, String)].collect()
     val input = MemoryStream[(String, String)](spark)
-    val q = EventsStream.hllRegisterByKeyStream(input.toDF().toDF("lang", "text"))
+    val q = graft.ext.Profiling.hllRegistersByKeyFor(input.toDF().toDF("lang", "text"))
       .writeStream.format("memory").queryName("hllk_stream")
       .outputMode("complete").start()
     docs.grouped(40).foreach { g => input.addData(g.toSeq: _*); q.processAllAvailable() }
@@ -1817,7 +1817,7 @@ class StreamingSpec extends SparkSpec {
       .select(col("lang"), col("doc_id").cast("string"))
       .as[(String, String)].collect()
     val input = MemoryStream[(String, String)](spark)
-    val q = EventsStream.quantileLevelByKeyStream(input.toDF().toDF("k", "qkey"))
+    val q = graft.ext.Profiling.quantileLevelHistByKey(input.toDF().toDF("k", "qkey"))
       .writeStream.format("memory").queryName("qlvlk_stream")
       .outputMode("complete").start()
     items.grouped(40).foreach { g => input.addData(g.toSeq: _*); q.processAllAvailable() }
@@ -1844,7 +1844,7 @@ class StreamingSpec extends SparkSpec {
     val docs = graft.Tables.documents(spark, dir)
       .select(col("source"), col("text")).as[(String, String)].collect()
     val input = MemoryStream[(String, String)](spark)
-    val q = EventsStream.kmvSketchStream(input.toDF().toDF("source", "text"))
+    val q = graft.ext.Profiling.kmvSketchFor(input.toDF().toDF("source", "text"))
       .writeStream.format("memory").queryName("kmv_stream")
       .outputMode("complete").start()
     docs.grouped(40).foreach { g => input.addData(g.toSeq: _*); q.processAllAvailable() }
@@ -1867,7 +1867,7 @@ class StreamingSpec extends SparkSpec {
     // round 18 (VERDICT r17 #6): the READ off the standing state — the
     // online report's sketch columns must equal the batch verdict
     // faces' sketch legs after full corpus replay
-    val report = EventsStream.kmvReportStream(spark.table("kmv_stream"))
+    val report = graft.ext.Profiling.kmvReportFor(spark.table("kmv_stream"))
       .as[(String, String, Long, Long, Option[Long], Long, Long)].collect().toSeq
     val batchOverlap = graft.ext.Profiling.kmvSourceOverlap(spark, dir)
       .select(col("source_a"), col("source_b"), col("m_size"),
@@ -1925,7 +1925,7 @@ class StreamingSpec extends SparkSpec {
       .select(col("doc_id"), col("text"), col("lang"))
       .as[(Long, String, String)].collect()
     val input = MemoryStream[(Long, String, String)](spark)
-    val q = EventsStream.langRouteStream(input.toDF().toDF("doc_id", "text", "lang"))
+    val q = graft.ext.TextAnalysis.langPredFor(input.toDF().toDF("doc_id", "text", "lang"))
       .writeStream.format("memory").queryName("lang_route")
       .outputMode("append").start()
     docs.grouped(200).foreach { g => input.addData(g.toSeq: _*); q.processAllAvailable() }
