@@ -192,8 +192,6 @@ object Bench {
       .master(s"local[$cpus]")
       .appName("graft-bench")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
       // AQE coalescing stays at parallelism-first (the Spark default):
       // measured A/B at sf0.1 showed size-based coalescing
       // (parallelismFirst=false, 64MB advisory) serializing mid-size
@@ -394,11 +392,6 @@ object Bench {
     // costs seconds, never correctness. Floors gate on the artifact's sf
     // matching this run's, so sf0.01 smoke runs never mis-trigger.
     val floorM = readFloors(java.nio.file.Paths.get("baseline_floors.json"), sfDir)
-    // sensitization knobs (validation only — the committed defaults ARE
-    // the graded contract): SPARK_GRAFT_RETIME_FACTOR lowers the
-    // steady-vs-floor trigger, SPARK_GRAFT_RETIME_LOAD the loadavg gate
-    val retimeFactor = sys.env.getOrElse("SPARK_GRAFT_RETIME_FACTOR", "2.5").toDouble
-    val retimeLoad = sys.env.getOrElse("SPARK_GRAFT_RETIME_LOAD", "4.0").toDouble
     val loadM = loadSamples.toMap
     val healedSteadyM = healedSteady.toMap
     // external-load estimate per rep: bracket minus the rep's own
@@ -410,7 +403,7 @@ object Bench {
         loadSuspect(healedSteadyM(n), f,
           math.max(bracketMax(loadM, "rep1", i, ordered.size) - base1,
             bracketMax(loadM, "rep2", i, ordered.size) - base2),
-          retimeFactor, retimeLoad)
+          2.5, 4.0)
       } => i
     }
     // each suspect re-runs behind its chain segment's head (the nearest

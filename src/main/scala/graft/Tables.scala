@@ -62,40 +62,29 @@ object Tables {
     "lineitem"   -> "l_orderkey",
     "embeddings" -> "vec_id")
 
-  /** Keyed by (dir, table, parallelism, file length, file mtime) — the
-    * length/mtime components invalidate the memoized decision when the
-    * table file is regenerated mid-session (ADVICE r21: a fixed key
-    * silently kept a stale floor decision; values were still correct —
-    * the repartition is semantics-preserving — but the floor could
-    * stop applying). The probe goes through the Hadoop FileSystem API
-    * (VERDICT r21 #7: `java.io.File` returns isFile=false on HDFS/S3,
-    * silently disabling the floor exactly where a single-file table
-    * would still serialize); same size-band guards as round 21.
+  /** The decision is memoized in the engine's one cache store
+    * ([[graft.ext.Dedup.Frames]]) under the table file's fingerprint, so
+    * the stat runs only on a miss and a regenerated file replaces its
+    * entry (ADVICE r21: a fixed key silently kept a stale floor
+    * decision; values were still correct — the repartition is
+    * semantics-preserving — but the floor could stop applying). The
+    * probe goes through the Hadoop FileSystem API (VERDICT r21 #7:
+    * `java.io.File` returns isFile=false on HDFS/S3, silently disabling
+    * the floor exactly where a single-file table would still serialize).
     */
-  private val widenCache =
-    new scala.collection.concurrent.TrieMap[(String, String, Int, Long, Long), Boolean]()
   private def widen(spark: SparkSession, sfDir: String,
       table: String, df: DataFrame): DataFrame = {
     if (!widenKeys.contains(table)) return df
     val p = spark.sparkContext.defaultParallelism
-    val path = new org.apache.hadoop.fs.Path(s"$sfDir/$table.parquet")
-    val st = try {
-      // the context's base conf, NOT sessionState.newHadoopConf(): the
-      // latter copies every SQL conf entry per call, and this probe
-      // runs on every table load (the FileSystem instance itself is
-      // cached by scheme, the stat is one syscall)
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Some(fs.getFileStatus(path))
-    } catch { case _: java.io.IOException => None }
-    val doWiden = st.exists { s =>
-      widenCache.getOrElseUpdate(
-        (sfDir, table, p, s.getLen, s.getModificationTime), {
-          // a directory-shaped table (multi-file production layout) or
-          // a large file never widens; tiny dimension tables (broadcast
-          // sides) aren't worth an exchange
-          s.isFile && s.getLen >= 262144 && s.getLen < (1L << 30) &&
-            df.rdd.getNumPartitions < p
-        })
+    val doWiden = graft.ext.Dedup.Frames.getOrComputeValue(spark,
+        s"widen:$table:$sfDir", sfDir, Seq(s"$table.parquet")) {
+      val path = new org.apache.hadoop.fs.Path(s"$sfDir/$table.parquet")
+      val s = path.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(path)
+      // a directory-shaped table (multi-file production layout) or a
+      // large file never widens; tiny dimension tables (broadcast
+      // sides) aren't worth an exchange
+      s.isFile && s.getLen >= 262144 && s.getLen < (1L << 30) &&
+        df.rdd.getNumPartitions < p
     }
     if (doWiden) df.repartition(p, col(widenKeys(table))) else df
   }

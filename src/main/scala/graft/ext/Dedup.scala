@@ -27,43 +27,48 @@ import graft.Tables
   */
 object Dedup {
 
-  /** Per-process memo of the expensive dedup frames (shingles, banded
-    * signatures, verified pairs), keyed by (session, kind, data dir).
+  /** The engine's one cache store, per process: persisted frames
+    * (shingles, banded signatures, verified pairs, ...), bounded
+    * driver-side values (trained weights, fitted seeds, the scan-widen
+    * decision) and tracked ad-hoc persists, keyed by (session, key) and
+    * stamped with the fingerprint of the table files the key reads.
     *
-    * Session contract: the memo hands every caller the SAME persisted
-    * DataFrame instance, so repeated calls in one process never
-    * re-persist a duplicate plan (the round-2 "Asked to cache already
-    * cached data" warnings) and the pair graph is computed ONCE per
-    * corpus no matter how many consumers ask — `x_dedup_clusters` after
-    * `x_dedup_ngram` costs only the component solve. If the caller
-    * evicts the data (`spark.catalog.clearCache()`), the next access
-    * re-arms the persist and recomputes lazily; [[releaseCaches]] drops
-    * everything explicitly for long-lived sessions.
+    * One lifetime rule: an entry dies when that fingerprint changes (the
+    * next access unpersists it and rebuilds from the NEW listing — the
+    * round-3 memo captured the parquet footer list once and silently
+    * served pre-write data forever), when its SparkContext has stopped
+    * (dropped on access, so the store cannot pin dead sessions), or on
+    * [[releaseCaches]], which unpersists every frame and drops every
+    * value — what keeps per-rep bench pricing honest.
     *
-    * Staleness + lifetime (ADVICE r3): each entry is stamped with a
-    * fingerprint of the corpus file listing (name:length:mtime per
-    * file), taken on every access — one cheap FS LIST. A write to the
-    * dir between queries changes the fingerprint, which unpersists the
-    * stale entry and rebuilds from the NEW file listing (the round-3
-    * memo captured the parquet footer list once and silently served
-    * pre-write data forever). Entries whose SparkContext has stopped
-    * are dropped on access, so the memo cannot pin dead sessions.
-    * Access is serialized on the memo (build-once guarantee — TrieMap
-    * `getOrElseUpdate` could run two concurrent `persist()` builds and
-    * discard one with its registration side effect already fired).
+    * Frames: every caller gets the SAME persisted DataFrame instance, so
+    * repeated calls never re-persist a duplicate plan (the round-2
+    * "Asked to cache already cached data" warnings) and the pair graph
+    * is computed ONCE per corpus no matter how many consumers ask —
+    * `x_dedup_clusters` after `x_dedup_ngram` costs only the component
+    * solve. If the caller evicts the data (`spark.catalog.clearCache()`),
+    * the next access re-arms the persist and recomputes lazily.
+    *
+    * One lock guards the map. A frame's lazy `build.persist()` runs
+    * under it (build-once guarantee — TrieMap `getOrElseUpdate` could
+    * run two concurrent `persist()` builds and discard one with its
+    * registration side effect already fired); a value's `build` and
+    * every fingerprint listing run outside it (see [[getOrComputeValue]]).
     */
-  private[ext] object Frames {
+  private[graft] object Frames {
     private val memo =
-      scala.collection.mutable.HashMap.empty[(SparkSession, String), (String, DataFrame)]
+      scala.collection.mutable.HashMap.empty[(SparkSession, String), (String, Any)]
+    private var tracked = 0L
 
-    /** Fingerprint of the table files backing a memoized frame — the
-      * listing of exactly the tables the KEY reads (review r12: a
-      * blanket two-table listing invalidated every document-side
-      * frame on an embedding rewrite and doubled the FS round-trips).
-      * One directory level, which any flat parquet write touches; a
-      * hive-partitioned layout with nested subdirectories would need
-      * a recursive listing, at which point fingerprint the partition
-      * dirs' mtimes instead of walking every leaf file.
+    /** Fingerprint of the table files backing a memoized entry — the
+      * listing (name:length:mtime per file) of exactly the tables the
+      * KEY reads (review r12: a blanket two-table listing invalidated
+      * every document-side frame on an embedding rewrite and doubled
+      * the FS round-trips). One directory level, which any flat parquet
+      * write touches; a hive-partitioned layout with nested
+      * subdirectories would need a recursive listing, at which point
+      * fingerprint the partition dirs' mtimes instead of walking every
+      * leaf file.
       */
     private def fingerprint(spark: SparkSession, dir: String,
         tables: Seq[String]): String =
@@ -76,27 +81,48 @@ object Dedup {
           .mkString("|")
       }.mkString("||")
 
+    /** The entry's frame, if it holds one (values hold anything else). */
+    private def frame(v: Any): Option[DataFrame] = v match {
+      case df: org.apache.spark.sql.Dataset[_] => Some(df.asInstanceOf[DataFrame])
+      case _ => None
+    }
+
+    private def unpersist(v: Any): Unit =
+      frame(v).filterNot(_.sparkSession.sparkContext.isStopped)
+        .foreach(_.unpersist(blocking = false))
+
+    /** The entry under `key` iff it was stamped with `fp`. Drops the
+      * entries of stopped contexts (they hold no cached blocks) and a
+      * stale entry for `key` (its corpus changed under the store).
+      * Callers hold the lock.
+      */
+    private def fresh(spark: SparkSession, key: String, fp: String): Option[Any] = {
+      memo.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
+      memo.get((spark, key)).flatMap { case (oldFp, v) =>
+        if (oldFp == fp) Some(v)
+        else { unpersist(v); memo.remove((spark, key)); None }
+      }
+    }
+
+    private def rearmed(df: DataFrame): Boolean = {
+      val rearm = df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+      if (rearm) df.persist()
+      rearm
+    }
+
     def getOrCompute(spark: SparkSession, key: String, dir: String,
         tables: Seq[String] = Seq("documents.parquet"),
         eager: Boolean = false)(build: => DataFrame): DataFrame = {
       // the filesystem LIST happens OUTSIDE the lock (round 6 — it
       // previously serialized every dedup-frame access across sessions
-      // and corpora behind one global mutex + FS round-trip); the lock
-      // below only guards the map and the build-once guarantee. A write
+      // and corpora behind one global mutex + FS round-trip). A write
       // racing this listing lands in whichever order it lands — the
-      // NEXT access sees the changed fingerprint and rebuilds, which is
-      // the same guarantee the locked version gave.
+      // NEXT access sees the changed fingerprint and rebuilds.
       val fp = fingerprint(spark, dir, tables)
       val (df, fill) = memo.synchronized {
-        // a stopped context holds no cached blocks — just drop the entry
-        memo.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-        memo.get((spark, key)) match {
-          case Some((oldFp, df)) if oldFp == fp =>
-            val rearm = df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-            if (rearm) df.persist()
-            (df, rearm)
-          case stale =>
-            stale.foreach(_._2.unpersist(blocking = false)) // corpus changed under the memo
+        fresh(spark, key, fp).flatMap(frame) match {
+          case Some(df) => (df, rearmed(df))
+          case None =>
             val df = build.persist()
             memo.put((spark, key), (fp, df))
             (df, true)
@@ -118,138 +144,84 @@ object Dedup {
       df
     }
 
-    /** Fresh-entry peek: the memoized frame iff present under the
-      * CURRENT corpus fingerprint — lets a two-level frame (pairs
-      * built from a memoized fingerprint frame) skip resolving its
-      * inner frame on an outer hit, which otherwise pays the inner
-      * entry's FS listing — and a full inner REBUILD if that entry was
-      * evicted — for a frame that goes unused (ADVICE r13). Re-arms
-      * persistence like [[getOrCompute]]. A racing peek-miss on two
-      * threads is safe: both fall through to getOrCompute, whose lock
-      * still guarantees build-once.
-      */
-    def peek(spark: SparkSession, key: String, dir: String,
-        tables: Seq[String] = Seq("documents.parquet")): Option[DataFrame] = {
-      val fp = fingerprint(spark, dir, tables)
-      memo.synchronized {
-        memo.get((spark, key)) match {
-          case Some((oldFp, df))
-              if oldFp == fp && !spark.sparkContext.isStopped =>
-            if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) df.persist()
-            Some(df)
-          case _ => None
-        }
-      }
-    }
-
     /** The peek-else-build composition every TWO-LEVEL frame uses
       * (review r13: the pattern was hand-rolled at three sites): a
       * fresh outer hit skips `build` entirely — and with it the inner
-      * frame's FS listing or rebuild; a miss runs `build`, which must
-      * resolve its inner frames BEFORE its own getOrCompute call so
-      * their listings stay outside the global memo lock (the round-6
-      * contention rule).
+      * frame's FS listing or a full inner REBUILD if that entry was
+      * evicted, for a frame that goes unused (ADVICE r13); a miss runs
+      * `build`, which must resolve its inner frames BEFORE its own
+      * getOrCompute call so their listings stay outside the lock (the
+      * round-6 contention rule). A racing miss on two threads is safe:
+      * both fall through to getOrCompute, whose lock still guarantees
+      * build-once.
       */
     def peekOrBuild(spark: SparkSession, key: String, dir: String,
-        tables: Seq[String] = Seq("documents.parquet"))(build: => DataFrame): DataFrame =
-      peek(spark, key, dir, tables).getOrElse(build)
+        tables: Seq[String] = Seq("documents.parquet"))(build: => DataFrame): DataFrame = {
+      val fp = fingerprint(spark, dir, tables)
+      memo.synchronized {
+        fresh(spark, key, fp).flatMap(frame).map { df => rearmed(df); df }
+      }.getOrElse(build)
+    }
 
-    /** Memoized BOUNDED driver-side artifact (round 15) — a trained
-      * weight vector, a fitted scalar — keyed and fingerprint-
-      * invalidated exactly like the frame memo, so "train once per
-      * (session, corpus), share across faces" applies to values the
-      * way it does to frames (VERDICT r14 #1: x_quality_calibration
-      * re-ran the 8-step GD x_quality_train had just run). `build`
-      * runs OUTSIDE the lock (review r15 — a training loop's 8 Spark
-      * jobs must not serialize every other session's cheap lookups
-      * behind one global mutex, the same rule the frame memo's round-6
-      * note applies to FS listings): two sessions racing a cold key
-      * both build, and the later put wins — harmless, because every
-      * artifact routed here is DETERMINISTIC (integer-exact training),
-      * so duplicate builds produce equal values. The artifact must be
-      * bounded (weights, boundaries — never corpus-sized) and is
-      * dropped by [[release]] with everything else, which is what
-      * keeps per-rep bench pricing honest.
+    /** Memoized BOUNDED driver-side value (round 15) — a trained weight
+      * vector, a fitted scalar — so "train once per (session, corpus),
+      * share across faces" applies to values the way it does to frames
+      * (VERDICT r14 #1: x_quality_calibration re-ran the 8-step GD
+      * x_quality_train had just run). `build` runs OUTSIDE the lock
+      * (review r15 — a training loop's 8 Spark jobs must not serialize
+      * every other session's cheap lookups behind one global mutex):
+      * two sessions racing a cold key both build, and the later put
+      * wins — harmless, because every value routed here is
+      * DETERMINISTIC, so duplicate builds produce equal values. The
+      * value must be bounded (weights, boundaries — never corpus-sized).
       */
-    private val valueMemo =
-      scala.collection.mutable.HashMap.empty[(SparkSession, String), (String, Any)]
-
     def getOrComputeValue[T](spark: SparkSession, key: String, dir: String,
         tables: Seq[String] = Seq("documents.parquet"))(build: => T): T = {
-      val fp = fingerprint(spark, dir, tables) // FS list outside any lock
-      val hit = valueMemo.synchronized {
-        valueMemo.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-        valueMemo.get((spark, key)).collect { case (oldFp, v) if oldFp == fp => v }
-      }
-      hit match {
+      val fp = fingerprint(spark, dir, tables)
+      memo.synchronized(fresh(spark, key, fp)) match {
         case Some(v) => v.asInstanceOf[T]
         case None =>
-          val v = build // Spark jobs run lock-free; racing builds are equal
-          valueMemo.synchronized { valueMemo.put((spark, key), (fp, v)) }
+          val v = build
+          memo.synchronized { memo.put((spark, key), (fp, v)) }
           v
       }
     }
 
-    def release(): Unit = {
-      memo.synchronized {
-        memo.values.foreach { case (_, df) =>
-          if (!df.sparkSession.sparkContext.isStopped) df.unpersist(blocking = false)
-        }
-        memo.clear()
-      }
-      valueMemo.synchronized { valueMemo.clear() }
+    /** Registers an ad-hoc persisted frame that cannot be unpersisted
+      * before its returned DataFrame is consumed (the kmv sketch/union-M
+      * frames, PageRank's loop-invariant edge frames) — ADVICE r21: bare
+      * `persist()` calls in report builders leaked block-manager entries
+      * until the ContextCleaner happened to GC the plan. The frame lives
+      * until the next [[releaseCaches]].
+      */
+    def trackPersist(df: DataFrame): DataFrame = memo.synchronized {
+      tracked += 1
+      memo.put((df.sparkSession, s"persist:$tracked"), ("", df))
+      df
     }
 
-    /** Test hook: keys of this session's memo entries whose frame is
+    def release(): Unit = memo.synchronized {
+      memo.values.foreach { case (_, v) => unpersist(v) }
+      memo.clear()
+    }
+
+    /** Test hook: this session's value keys plus the keys of its frames
       * still marked for caching (storageLevel != NONE) — lets specs
       * assert two corpora COEXIST instead of thrashing one entry.
       */
     def residentKeys(spark: SparkSession): Set[String] = memo.synchronized {
       memo.collect {
-        case ((s, key), (_, df))
-            if (s eq spark) &&
-              df.storageLevel != org.apache.spark.storage.StorageLevel.NONE => key
+        case ((s, key), (_, v)) if (s eq spark) &&
+            frame(v).forall(_.storageLevel != org.apache.spark.storage.StorageLevel.NONE) => key
       }.toSet
     }
   }
 
-  /** Ad-hoc persisted frames that cannot be unpersisted before their
-    * returned DataFrame is consumed (the kmv sketch/union-M frames,
-    * PageRank's loop-invariant edge frames) — ADVICE r21: bare
-    * `persist()` calls in report builders leaked block-manager entries
-    * until the ContextCleaner happened to GC the plan. Registering the
-    * frame here bounds the leak to one release cycle: [[releaseCaches]]
-    * (called by Bench/Verify per rep, and by long-lived sessions per
-    * corpus) drops them with the memoized frames. Entries whose context
-    * has stopped are skipped, mirroring [[Frames.release]].
+  /** Unpersist and forget every entry of the cache store (see
+    * [[Frames]]). Long-lived sessions call this when done with a
+    * corpus; Bench and Verify call it at the end of a run.
     */
-  private val adHocPersists =
-    scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-
-  private[graft] def trackPersist(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    adHocPersists.synchronized { adHocPersists += df }
-    df
-  }
-
-  /** Unpersist and forget every memoized dedup frame (see [[Frames]])
-    * plus the tracked ad-hoc report persists. Long-lived sessions call
-    * this when done with a corpus; Bench and Verify call it at the end
-    * of a run.
-    */
-  def releaseCaches(): Unit = {
-    Frames.release()
-    adHocPersists.synchronized {
-      adHocPersists.foreach { df =>
-        if (!df.sparkSession.sparkContext.isStopped) df.unpersist(blocking = false)
-      }
-      adHocPersists.clear()
-    }
-  }
-
-  /** Test hook — see [[Frames.residentKeys]]. */
-  private[graft] def residentFrameKeys(spark: SparkSession): Set[String] =
-    Frames.residentKeys(spark)
+  def releaseCaches(): Unit = Frames.release()
 
   /** Distinct 8-char shingles per document, pre-hashed to 64-bit longs,
     * one (doc_id, ng) row each.

@@ -69,12 +69,12 @@ object Graph {
     // idle cores. This round reshapes the loop so the barrier never
     // exists and the loop body carries NO Exchange (guide §2.4/§3.1):
     //  - `ed` is persisted LAZILY and tracked for release
-    //    (Dedup.trackPersist): the rank/contrib sides are broadcast, so
-    //    the loop executes sequentially anyway (iteration i+1's
-    //    broadcast waits on iteration i) — the first iteration fills
-    //    the cache as a side effect of work it had to do, every later
-    //    reference reads blocks, and nothing is serialized that used
-    //    to overlap.
+    //    (Dedup.Frames.trackPersist, released by releaseCaches): the
+    //    rank/contrib sides are broadcast, so the loop executes
+    //    sequentially anyway (iteration i+1's broadcast waits on
+    //    iteration i) — the first iteration fills the cache as a side
+    //    effect of work it had to do, every later reference reads
+    //    blocks, and nothing is serialized that used to overlap.
     //  - the joined edge frame is hash-partitioned by w2 BEFORE its
     //    persist, so each iteration's groupBy(w2) aggregate reuses the
     //    cached partitioning: the per-iteration plan is
@@ -89,10 +89,10 @@ object Graph {
     // checkpointRanks=true; the integer trajectory is join-strategy-
     // and partitioning-independent (decimal sums are exact), so the
     // numbers cannot move.
-    val edC = Dedup.trackPersist(ed.persist())
-    val deg = Dedup.trackPersist(
+    val edC = Dedup.Frames.trackPersist(ed.persist())
+    val deg = Dedup.Frames.trackPersist(
       edC.groupBy(col("w1")).agg(sum(col("wt")).as("wdeg")).persist())
-    val edges = Dedup.trackPersist(
+    val edges = Dedup.Frames.trackPersist(
       edC.join(broadcast(deg), "w1").repartition(col("w2")).persist())
     var rank = deg.select(col("w1").as("w"), lit(1000000L).as("r"))
     for (_ <- 1 to iters) {

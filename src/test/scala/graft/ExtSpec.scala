@@ -2508,7 +2508,7 @@ class ExtSpec extends SparkSpec {
       // alternate back: with per-dir keys this is a hit, not a rebuild
       Dedup.simhashPairsQuery(spark, "/root/testdata/sf0.001").write
         .format("noop").mode("overwrite").save()
-      val resident = Dedup.residentFrameKeys(spark)
+      val resident = Dedup.Frames.residentKeys(spark)
         .filter(_.startsWith("simhash_fp:"))
       assert(resident ==
         Set("simhash_fp:/root/testdata/sf0.001", "simhash_fp:/root/testdata/sf0.01"),

@@ -8,13 +8,14 @@ lives under target/ (gitignored), same convention as
 derive_scale_relational.py.
 
 Replication shape:
-  - documents: doc_id += r * 5_000 (unique ids; text/lang/source/
+  - documents: doc_id += r * stride, stride = max(doc_id) + 1 of the
+    source (unique ids whatever the source's id range; text/lang/source/
     n_chars unchanged — shingle and token mass grow 10x, per-doc work
     unchanged, which is exactly the parallelism question)
-  - embeddings: vec_id += r * 2_000 (labels unchanged). Replicated
-    vectors are duplicates in embedding space — fine for a wall-clock
-    probe of the encode/scan stages (PQ encode cost is per-row), NOT a
-    recall probe.
+  - embeddings: vec_id += r * stride, stride = max(vec_id) + 1 (labels
+    unchanged). Replicated vectors are duplicates in embedding space —
+    fine for a wall-clock probe of the encode/scan stages (PQ encode
+    cost is per-row), NOT a recall probe.
 """
 import duckdb, os
 
@@ -35,7 +36,14 @@ def copy(sql, table):
 
 reps = f"(SELECT unnest(generate_series(0, {R - 1})) AS r) reps"
 
-copy(f"""SELECT doc_id + r * 5000 AS doc_id, text, lang, source, n_chars
+def stride(table, id_col):
+    """max(id)+1 of the source table: replica r's ids start past every
+    source id, so replicas never collide."""
+    return con.sql(f"SELECT max({id_col}) + 1 FROM read_parquet('{SRC}/{table}.parquet')").fetchone()[0]
+
+doc_stride = stride("documents", "doc_id")
+vec_stride = stride("embeddings", "vec_id")
+copy(f"""SELECT doc_id + r * {doc_stride} AS doc_id, text, lang, source, n_chars
          FROM read_parquet('{SRC}/documents.parquet'), {reps}""", "documents")
-copy(f"""SELECT vec_id + r * 2000 AS vec_id, embedding, label
+copy(f"""SELECT vec_id + r * {vec_stride} AS vec_id, embedding, label
          FROM read_parquet('{SRC}/embeddings.parquet'), {reps}""", "embeddings")
