@@ -126,6 +126,44 @@ object Bench {
       factor: Double, loadGate: Double): Boolean =
     floor > 0.0 && steady > factor * floor && externalLoad > loadGate
 
+  /** Times query runs and keeps failed queries out of the timings. A run
+    * that throws is logged, its query recorded in [[failed]], and it
+    * yields no time: its wall (often near zero) must not read as a fast
+    * query. [[json]] drops every failed query from a timing list, so a
+    * query that failed in any pass appears in the artifact only under
+    * `failed`.
+    */
+  private[graft] final class Timer {
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+
+    def time(name: String)(run: => Unit): Option[Double] = {
+      val t0 = System.nanoTime()
+      try { run; Some((System.nanoTime() - t0) / 1e9) }
+      catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $name failed: $e")
+          failed += name
+          None
+      }
+    }
+
+    def timings(xs: Seq[(String, Double)]): Seq[(String, Double)] =
+      xs.filterNot { case (n, _) => failed(n) }
+
+    def total(xs: Seq[(String, Double)]): Double = timings(xs).map(_._2).sum
+
+    /** `xs` without failed queries as a JSON object, at millisecond
+      * precision (full-double seconds tripled the line width for digits
+      * below measurement noise).
+      */
+    def json(xs: Seq[(String, Double)]): String =
+      timings(xs).map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
+
+    def failedJson: String = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+  }
+
+  private[graft] def r3(v: Double): Double = math.rint(v * 1000) / 1000
+
   /** The warm-up scale directory: `sf0.001` beside `sfDir`, so warm-up
     * reads follow the timed data's layout wherever it lives.
     */
@@ -223,6 +261,9 @@ object Bench {
     // Deterministic order with the clusters-after-ngram keep-warm rule —
     // shared with Verify/TimeMany and name-asserted (SparkEntry).
     val ordered = SparkEntry.orderedQueryNames
+    val timer = new Timer
+    // a failed run counts 0.0 here, which no heal or retime trigger
+    // below fires on, and `timer.json` drops it from every list
     def timeOne(name: String): Double = {
       val fn = SparkEntry.queries(name)
       // isolate queries from each other: drop any frame the previous
@@ -233,10 +274,8 @@ object Bench {
         spark.catalog.clearCache()
         System.gc()
       }
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e") }
-      (System.nanoTime() - t0) / 1e9
+      timer.time(name)(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
+        .getOrElse(0.0)
     }
     def runAll(repLabel: String): Seq[(String, Double)] = {
       loadSamples += (s"${repLabel}_start" -> loadavg1())
@@ -275,7 +314,6 @@ object Bench {
     val rep1m = rep1.toMap
     val rep2m = rep2.toMap
     val steady = ordered.map(n => n -> math.min(rep1m(n), rep2m(n)))
-    val totalCold = rep1.map(_._2).sum
 
     // Chain-only witness pass (VERDICT r8 #7): the five dedup entries,
     // alone, from a flushed state — minhash first (independent), then
@@ -362,7 +400,6 @@ object Bench {
       n -> chainRetimed.toMap.getOrElse(n, v)
     }
     val chainM = chainHealed.toMap
-    val chainSteady = chainHealed.map(_._2).sum
     val retimed: Seq[(String, Double)] = inflated.map { n =>
       n -> math.min(chainM(n), healM.getOrElse(n, Double.MaxValue))
     }
@@ -439,18 +476,16 @@ object Bench {
     graft.ext.Dedup.releaseCaches()
     spark.catalog.clearCache()
 
-    // millisecond precision: full-double seconds tripled the line width
-    // for digits below measurement noise
-    def r3(v: Double): Double = math.rint(v * 1000) / 1000
-    def jmap(xs: Seq[(String, Double)]): String =
-      xs.map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
-    val total = finalSteady.map(_._2).sum
+    def jmap(xs: Seq[(String, Double)]): String = timer.json(xs)
+    val total = timer.total(finalSteady)
+    val totalCold = timer.total(rep1)
+    val chainSteady = timer.total(chainHealed)
     // one adoption record covering both heal mechanisms: the chain
     // witness (`retimed`) and the floor trigger (`floorRetimed`) — a
     // query caught by both records the smaller adopted value
     val allRetimed = (retimed ++ floorRetimed)
       .groupBy(_._1).map { case (n, vs) => n -> vs.map(_._2).min }.toSeq.sortBy(_._1)
-    val totalRep2 = rep2.map(_._2).sum
+    val totalRep2 = timer.total(rep2)
     // pre-heal standalone values for the adopted entries, so the artifact
     // shows exactly what the sweep measured and what replaced it
     val standaloneFlagged = inflated.map(n => n -> steady.toMap.apply(n))
@@ -466,12 +501,12 @@ object Bench {
     // line first, persist it to bench.json for the judge, and end with a
     // COMPACT total line that always fits the tail window whole.
     val full =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","total_cold":${r3(totalCold)},"total_steady":${r3(total)},"total_rep2":${r3(totalRep2)},"reps":2,"steady_def":"per-query min over reps","chain_steady":${r3(chainSteady)},"ingest_eps":${eps.round},"ingest_eps_rep1":${eps1.round},"ingest_eps_rep2":${eps2.round},"queries":${jmap(finalSteady)},"queries_rep1":${jmap(rep1)},"queries_rep2":${jmap(rep2)},"queries_retimed":${jmap(allRetimed)},"queries_floor_preheal":${jmap(floorPreheal)},"queries_floor_pass":${jmap(floorPass)},"queries_standalone_preheal":${jmap(standaloneFlagged)},"chain":${jmap(chainHealed)},"chain_preheal":${jmap(chain)},"chain_retimed":${jmap(chainRetimed)},"chain_rep1":${jmap(chain1)},"chain_rep2":${jmap(chain2)},"chain_heal":${jmap(heal)},"loadavg":${jmap(loadSamples.toSeq)},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","total_cold":${r3(totalCold)},"total_steady":${r3(total)},"total_rep2":${r3(totalRep2)},"reps":2,"steady_def":"per-query min over reps","chain_steady":${r3(chainSteady)},"ingest_eps":${eps.round},"ingest_eps_rep1":${eps1.round},"ingest_eps_rep2":${eps2.round},"queries":${jmap(finalSteady)},"queries_rep1":${jmap(rep1)},"queries_rep2":${jmap(rep2)},"queries_retimed":${jmap(allRetimed)},"queries_floor_preheal":${jmap(floorPreheal)},"queries_floor_pass":${jmap(floorPass)},"queries_standalone_preheal":${jmap(standaloneFlagged)},"chain":${jmap(chainHealed)},"chain_preheal":${jmap(chain)},"chain_retimed":${jmap(chainRetimed)},"chain_rep1":${jmap(chain1)},"chain_rep2":${jmap(chain2)},"chain_heal":${jmap(heal)},"loadavg":${jmap(loadSamples.toSeq)},"failed":${timer.failedJson},"sf":"$sfDir"}"""
     println(full)
     try java.nio.file.Files.writeString(java.nio.file.Paths.get("bench.json"), full + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] bench.json write failed: $e") }
     val compact =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","total_cold":${r3(totalCold)},"total_steady":${r3(total)},"total_rep2":${r3(totalRep2)},"chain_steady":${r3(chainSteady)},"n_queries":${steady.size},"ingest_eps":${eps.round},"ingest_eps_rep1":${eps1.round},"ingest_eps_rep2":${eps2.round},"sf":"$sfDir","queries_file":"bench.json"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","total_cold":${r3(totalCold)},"total_steady":${r3(total)},"total_rep2":${r3(totalRep2)},"chain_steady":${r3(chainSteady)},"n_queries":${timer.timings(finalSteady).size},"n_failed":${timer.failed.size},"ingest_eps":${eps.round},"ingest_eps_rep1":${eps1.round},"ingest_eps_rep2":${eps2.round},"sf":"$sfDir","queries_file":"bench.json"}"""
     // Round 13 (VERDICT r12 task 7 — every BENCH_r*.json parsed null):
     // persist the compact line to its own file AND re-print it from a
     // JVM shutdown hook, which runs after main returns and Spark's

@@ -30,7 +30,8 @@ object Dedup {
   /** The engine's one cache store, per process: persisted frames
     * (shingles, banded signatures, verified pairs, ...), bounded
     * driver-side values (trained weights, fitted seeds, the scan-widen
-    * decision) and tracked ad-hoc persists, keyed by (session, key) and
+    * decision, each table file's parquet schema) and tracked ad-hoc
+    * persists, keyed by (session, key) and
     * stamped with the fingerprint of the table files the key reads.
     *
     * One lifetime rule: an entry dies when that fingerprint changes (the

@@ -1344,7 +1344,7 @@ object Similarity {
     // widened scan (Tables.embeddingsWide): the m-subspace argmin
     // encode is the one embedding projection heavy enough that its
     // per-broadcast-child re-executions dominated the face on a
-    // 1-task scan (StageProfile r21: 2 stages of 7-8 s, 1 task each)
+    // 1-task scan (stage profile r21: 2 stages of 7-8 s, 1 task each)
     val e = Tables.embeddingsWide(spark, dir)
     val (seeds, books) = pqTrainedBooks(spark, dir, m, ksub, iters)
     val centsD: Array[Array[Double]] = seeds.sortBy(_._1).map(_._2.map(_.toDouble))

@@ -85,7 +85,7 @@ object Relational2 {
     * (rollup/cube's general form).
     */
   def q18GroupingSets(spark: SparkSession, dir: String): DataFrame = {
-    Tables.registerAll(spark, dir)
+    Tables.registerViews(spark, dir, "orders")
     spark.sql(
       """SELECT o_orderstatus, o_orderpriority,
          CAST(grouping(o_orderstatus) * 2 + grouping(o_orderpriority) AS BIGINT) AS gid,
@@ -100,7 +100,7 @@ object Relational2 {
     * optimizer path, not the DataFrame DSL).
     */
   def q19SqlSurface(spark: SparkSession, dir: String): DataFrame = {
-    Tables.registerAll(spark, dir)
+    Tables.registerViews(spark, dir, "customer", "orders", "lineitem")
     spark.sql(
       """SELECT l_orderkey,
          round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
@@ -193,7 +193,7 @@ object Relational2 {
     * per-row re-execution.
     */
   def q25Subqueries(spark: SparkSession, dir: String): DataFrame = {
-    Tables.registerAll(spark, dir)
+    Tables.registerViews(spark, dir, "customer", "orders")
     spark.sql(
       """SELECT c_custkey, c_name,
            (SELECT count(*) FROM orders o WHERE o.o_custkey = c.c_custkey) AS n_orders
@@ -240,7 +240,7 @@ object Relational2 {
     * deterministic without a unique sort key.
     */
   def q28RangeFrame(spark: SparkSession, dir: String): DataFrame = {
-    Tables.registerAll(spark, dir)
+    Tables.registerViews(spark, dir, "orders")
     spark.sql(
       """SELECT o_orderkey,
            CAST(count(*) OVER w AS BIGINT) AS n_7d,
@@ -255,7 +255,7 @@ object Relational2 {
     * split tokens (the Hive/Spark idiom; DuckDB's twin is unnest).
     */
   def q29LateralExplode(spark: SparkSession, dir: String): DataFrame = {
-    Tables.registerAll(spark, dir)
+    Tables.registerViews(spark, dir, "part")
     spark.sql(
       """SELECT word, count(*) AS n, count(DISTINCT p_partkey) AS n_parts
          FROM part LATERAL VIEW explode(split(p_name, ' ')) t AS word

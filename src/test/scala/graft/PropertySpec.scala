@@ -304,4 +304,22 @@ class PropertySpec extends SparkSpec {
     assert(!Bench.loadSuspect(0.505, 0.202, 18.0, 2.5, 4.0),
       "uniform-load 2.50x worst case stays below the strict threshold")
   }
+
+  test("bench timing path: a throwing query is recorded as failed, never as a timing") {
+    val timer = new Bench.Timer
+    def run(df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
+    val ok = timer.time("q_ok")(run(spark.range(10).toDF("x")))
+    // the failure surfaces at execution, as a broken query's would
+    val boom = timer.time("q_boom")(run(spark.range(10).select(raise_error(lit("boom")))))
+    assert(ok.exists(_ >= 0.0), "a succeeding run yields its wall time")
+    assert(boom.isEmpty, "a throwing run yields no time")
+    assert(timer.failed.toSeq == Seq("q_boom"))
+    // a query that failed in any pass leaves every timing list and total
+    val rep = Seq("q_ok" -> 1.25, "q_boom" -> 0.0)
+    assert(timer.timings(rep) == Seq("q_ok" -> 1.25))
+    assert(timer.total(rep) == 1.25)
+    assert(timer.json(rep) == """{"q_ok":1.25}""")
+    assert(timer.failedJson == """["q_boom"]""")
+  }
 }
