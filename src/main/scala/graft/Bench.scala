@@ -226,20 +226,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE coalescing stays at parallelism-first (the Spark default):
-      // measured A/B at sf0.1 showed size-based coalescing
-      // (parallelismFirst=false, 64MB advisory) serializing mid-size
-      // CPU-heavy shuffles to 1 task — q16 exact percentile 3.2→5.2 s,
-      // minhash 5.2→7.5 s — a net loss on every probe query
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus)
 
     val loadSamples = scala.collection.mutable.ArrayBuffer[(String, Double)]()
 

@@ -262,239 +262,120 @@ object SparkEntry {
     "x_funnel_orders"   -> (Dedup.funnelOrders _),
   )
 
-  /** Queries that run WITHOUT the runners' pre-query cache flush so they
-    * consume the memoized frames the preceding dedup query built:
-    * `x_dedup_clusters` reuses `x_dedup_ngram`'s pair frame,
-    * `x_dedup_apply` reuses it again plus the cluster labels, and
-    * `x_dedup_incremental` judges the arriving batch against the same
-    * pair graph — the production shape, where pairs are computed once
-    * per corpus and every downstream decision prices only its own
-    * increment — and `x_dedup_containment` probes the same memoized
-    * doc-set frame for asymmetric (quote/subset) pairs, pricing only
-    * its own prefix-vs-index join.
-    */
-  val keepWarmQueries: Set[String] =
-    Set("x_dedup_clusters", "x_dedup_canonical", "x_dedup_apply", "x_dedup_incremental",
-      "x_dedup_containment", "x_split_leakage", "x_quality_vs_dup", "x_source_overlap",
-      "x_filter_funnel", "x_funnel_orders", "x_dataset_card",
-      // round 14: the banding design table and the dedup-adjusted
-      // mixture both ride the same memoized pair frame — they price a
-      // bucket aggregate and a |sources|-row aggregate respectively
-      "x_lsh_tuning", "x_mixture_dedup_adjusted",
-      // round 12: the chunk family gets the same contract — clusters
-      // rides the memoized pair frame x_chunk_neardup just built and
-      // prices only its component solve (the production shape)
-      "x_chunk_clusters",
-      // and the simhash family: clusters rides the memoized
-      // fingerprint frame x_dedup_simhash_pairs just re-banded, and
-      // the detector-agreement matrix consumes the same pair memo.
-      // Round 14: x_dedup_simhash_pairs itself joins the no-flush set
-      // because the simhash block now EXTENDS the ngram chain —
-      // x_detector_overlap rides BOTH the ngram and simhash frames, so
-      // a flush at the simhash anchor made its witness pay a full
-      // ngram-pair rebuild; the prior warm ngram frames don't
-      // subsidize the fp build, so simhash_pairs' own price stays
-      // honest (its fingerprint memo is disjoint from the pair memo)
-      "x_dedup_simhash_pairs", "x_dedup_simhash_clusters", "x_detector_overlap",
-      // round 14: the perplexity family rides the memoized per-language
-      // LM score frame x_lm_score_lang just built — buckets price the
-      // boundary selection + row-local banding, outliers the |langs|-row
-      // moments, not three LM trainings
-      "x_ppl_buckets", "x_text_outliers",
-      // round 15: the calibration family rides the memoized trained
-      // weight vector x_quality_train just fit (VERDICT r14 #1 — the
-      // diagram and the temperature fit price one selection pass + a
-      // ≤10-row aggregate each, not an 8-step GD re-run apiece)
-      "x_quality_calibration", "x_quality_temperature",
-      // round 15 (cont.): the ablation audit rides the same memoized
-      // weight vector — it prices one mean aggregate + one scan
-      "x_quality_ablation",
-      // round 15 (cont.): the kpp-seeded IVF search rides the memoized
-      // k-means|| training run x_kmeans_scalable just priced — it pays
-      // one assignment scan + bounded top-k, not a re-training
-      "x_sim_ivf_kpp",
-      // and the PR operating-point menu is one more quality-chain rider
-      "x_quality_pr",
-      // round 15 (cont.): the heuristic-vs-trained agreement matrix
-      // rides the same memoized weight vector — two row-local scans +
-      // a 4-cell aggregate, never a GD re-run
-      "x_filter_agreement",
-      // round 15 (review): the probe report and the nDCG verdict ride
-      // the memoized nprobe=8 probe-candidate frame the operating
-      // curve (the chain anchor) just built — each prices its own
-      // aggregation + brute truth scan, not another assignment scan +
-      // probe explode-join; their nprobe=4 sets are prefix filters of
-      // the anchored frame
-      "x_sim_ivf_probe", "x_rank_ndcg",
-      // round 15 (cont.): fuzzy decontamination is one more ngram-chain
-      // rider — the pair frame restricted to corpus×eval incidence
-      "x_decontam_neardup",
-      // round 15 (cont.): the edit-distance classifier prices two text
-      // joins + the row-local DP over the same memoized pair frame
-      "x_dedup_edit",
-      // round 16: the nprobe face of the residual IVF-PQ search rides
-      // the memoized (seeds, books) training artifact the single-cell
-      // search (the pq chain anchor) just fit — it prices one encode
-      // projection + the probe explode-join, not a duplicate
-      // 2-iteration Lloyd's training run (VERDICT r15 #1)
-      "x_sim_ivf_pq_probe",
-      // round 17: the weighted sample and its stratified twin are
-      // quality-chain riders — each prices one probability projection
-      // + a bounded bottom-k aggregate over the memoized weight
-      // vector, never a GD re-run
-      "x_sample_weighted", "x_sample_weighted_by_key",
-      // round 17: the a-not-b and cardinality faces ride the memoized
-      // truth-leg tok frame x_kmv_overlap (the kmv chain's anchor)
-      // just built — each prices its own sketch re-aggregation, never
-      // a second corpus-scale distinct-shingle build
-      "x_kmv_diff", "x_kmv_card",
-      // round 18: the production cardinality read rides the same
-      // standing tok frame — a bottom-k re-aggregate + k-row
-      // arithmetic, the monitor priced without its audit
-      "x_kmv_card_prod",
-      // round 17: the nsw chain — the hierarchical face and the
-      // kNN-graph LexRank both ride the memoized base neighbor graph
-      // (and seedAssigned) the flat NSW search just built; standalone,
-      // each re-paid the within-cell top-m graph build (measured
-      // 9.9 s for x_lexrank_graph standalone vs the ~2 s incremental
-      // PageRank it actually adds)
-      "x_sim_nsw_hier", "x_lexrank_graph",
-      // round 17: the template cleaner rides the memoized (source, lh,
-      // df) frequency frame the report just built — it prices one
-      // anti-join + the per-doc reassembly, never a second frequency
-      // aggregate
-      "x_template_apply",
-      // round 17: the AGMS join-size face rides the memoized grouped
-      // sign registers x_f2_by_key just built — pair-matrix arithmetic
-      // over <= s·|sources| rows plus its truth join, never a second
-      // token scan for registers
-      "x_f2_join_size",
-      // round 18: the corpus-wide production F2 read merges the same
-      // standing registers by addition — s rows of arithmetic, no
-      // token scan, no truth leg
-      "x_f2_prod",
-      // round 18: the trained-language-ID confusion verdict rides the
-      // anchor's memoized feature frame + weight vectors — one
-      // 5000-row scoring pass + a 25-cell aggregate, never a second
-      // bigram explode or GD run
-      "x_lang_trained_eval")
-
-  /** The chain ANCHORS — the entries that build each keep-warm chain's
-    * memoized frame (pairs / chunk pairs / simhash fingerprints / the
-    * per-language LM scores). Bench's chain-witness pass must run the
-    * anchor before its riders or every rider's "witness" pays a full
-    * frame rebuild (round 14: the r13 artifact carried
+  /** The keep-warm chains, declared once. A chain's head is its
+    * ANCHOR: it builds a memoized frame or value. Every later entry is
+    * a RIDER: it runs right after its predecessor WITHOUT the runners'
+    * pre-query cache flush, so it consumes what the anchor built and
+    * prices only its own increment — the production shape, where an
+    * artifact is computed once per corpus and every downstream
+    * decision pays only for itself. Bench's chain-witness pass must
+    * run the anchor before its riders or every rider's "witness" pays
+    * a full rebuild (round 14: the r13 artifact carried
     * x_dedup_simhash_clusters at 3.0 s in chain passes vs 0.32 s
-    * standalone for exactly this reason — the simhash anchor was
-    * missing from the witness pass). `x_dedup_simhash_pairs` is not
-    * listed: it joined the no-flush keep-warm set itself when the
-    * simhash block became a continuation of the ngram chain.
+    * standalone for exactly this reason).
     */
-  val chainAnchors: Set[String] =
-    Set("x_dedup_ngram", "x_chunk_neardup", "x_lm_score_lang", "x_quality_train",
-      "x_kmeans_scalable", "x_sim_ivf_curve", "x_sim_ivf_pq",
-      // round 17: the kmv chain — the overlap report builds the
-      // memoized truth-leg tok frame the a-not-b face rides
-      "x_kmv_overlap",
-      // round 17: the nsw chain — the flat search builds the memoized
-      // base neighbor graph + assignment its two riders consume
-      "x_sim_nsw",
-      // round 17: the template report builds the memoized (source, lh,
-      // df) frequency frame the cleaner rides
-      "x_template_lines",
-      // round 17: the grouped-F2 face builds the memoized per-source
-      // sign registers the join-size estimator rides
-      "x_f2_by_key",
-      // round 18: the trained language-ID anchor builds the memoized
-      // per-doc feature frame (one bigram explode) + the OVR weights
-      "x_lang_trained")
+  val chains: Seq[Seq[String]] = Seq(
+    // the ngram chain: clusters, canonical and apply reuse
+    // x_dedup_ngram's pair frame (apply also the cluster labels),
+    // incremental judges the arriving batch against the same pair
+    // graph, containment probes the same doc-set frame for asymmetric
+    // (quote/subset) pairs. Round 14: the banding design table and the
+    // dedup-adjusted mixture ride the same pair frame (a bucket and a
+    // |sources|-row aggregate); round 15: fuzzy decontamination (the
+    // pair frame restricted to corpus×eval incidence) and the
+    // edit-distance classifier (two text joins + the row-local DP).
+    // Round 14: the simhash block CONTINUES this chain instead of
+    // being flush-isolated — x_detector_overlap rides BOTH the ngram
+    // pair frame and the simhash fingerprint frame, so a flush at the
+    // simhash anchor made its witness pay a full ngram-pair rebuild;
+    // the warm ngram frames don't subsidize the fingerprint build
+    // (its memo is disjoint from the pair memo), so
+    // x_dedup_simhash_pairs' own price stays honest
+    Seq("x_dedup_ngram", "x_dedup_clusters", "x_dedup_canonical", "x_dedup_apply",
+      "x_dedup_incremental", "x_dedup_containment", "x_split_leakage",
+      "x_quality_vs_dup", "x_source_overlap", "x_filter_funnel", "x_funnel_orders",
+      "x_dataset_card", "x_lsh_tuning", "x_mixture_dedup_adjusted",
+      "x_decontam_neardup", "x_dedup_edit",
+      "x_dedup_simhash_pairs", "x_dedup_simhash_clusters", "x_detector_overlap"),
+    // round 12: clusters rides the pair frame x_chunk_neardup just
+    // built and prices only its component solve
+    Seq("x_chunk_neardup", "x_chunk_clusters"),
+    // round 14: the perplexity family rides the memoized per-language
+    // LM score frame — buckets price the boundary selection + row-local
+    // banding, outliers the |langs|-row moments, not three LM trainings
+    Seq("x_lm_score_lang", "x_ppl_buckets", "x_text_outliers"),
+    // round 15: the trained-filter chain — the anchor fits the weight
+    // vector once; the ablation audit (one mean aggregate + one scan),
+    // the calibration diagram and temperature fit (one selection pass
+    // + a ≤10-row aggregate each), the PR operating-point menu, the
+    // heuristic-vs-trained agreement matrix (two row-local scans + a
+    // 4-cell aggregate) and (round 17) the weighted sample and its
+    // stratified twin (one probability projection + a bounded bottom-k
+    // aggregate each) ride it, never a GD re-run (VERDICT r14 #1)
+    Seq("x_quality_train", "x_quality_ablation", "x_quality_calibration",
+      "x_quality_temperature", "x_quality_pr", "x_filter_agreement",
+      "x_sample_weighted", "x_sample_weighted_by_key"),
+    // round 15: the kpp-seeded IVF search rides the memoized k-means||
+    // training run the trajectory report just priced — one assignment
+    // scan + bounded top-k, not a re-training
+    Seq("x_kmeans_scalable", "x_sim_ivf_kpp"),
+    // round 15 (review): the probe report and the nDCG verdict ride the
+    // memoized nprobe=8 probe-candidate frame the operating curve
+    // builds — each prices its own aggregation + brute truth scan; their
+    // nprobe=4 sets are prefix filters of the anchored frame
+    Seq("x_sim_ivf_curve", "x_sim_ivf_probe", "x_rank_ndcg"),
+    // round 16: the nprobe face of the residual IVF-PQ search rides the
+    // memoized (seeds, books) training artifact the single-cell search
+    // just fit — one encode projection + the probe explode-join, not a
+    // duplicate 2-iteration Lloyd's run (VERDICT r15 #1)
+    Seq("x_sim_ivf_pq", "x_sim_ivf_pq_probe"),
+    // round 17: the a-not-b and cardinality faces ride the memoized
+    // truth-leg tok frame the overlap report builds — each prices its
+    // own sketch re-aggregation, never a second distinct-shingle build;
+    // round 18: the production cardinality read (a bottom-k
+    // re-aggregate + k-row arithmetic) closes the chain
+    Seq("x_kmv_overlap", "x_kmv_diff", "x_kmv_card", "x_kmv_card_prod"),
+    // round 17: the hierarchical face and the kNN-graph LexRank ride
+    // the memoized base neighbor graph (and seedAssigned) the flat NSW
+    // search builds; standalone, each re-paid the within-cell top-m
+    // graph build (9.9 s for x_lexrank_graph vs the ~2 s incremental
+    // PageRank it adds)
+    Seq("x_sim_nsw", "x_sim_nsw_hier", "x_lexrank_graph"),
+    // round 17: the cleaner rides the memoized (source, lh, df)
+    // frequency frame the template report builds — one anti-join + the
+    // per-doc reassembly, never a second frequency aggregate
+    Seq("x_template_lines", "x_template_apply"),
+    // round 17: the AGMS join-size face rides the memoized grouped sign
+    // registers x_f2_by_key builds (pair-matrix arithmetic over
+    // ≤ s·|sources| rows plus its truth join); round 18: the
+    // corpus-wide production F2 read merges the same registers by
+    // addition — s rows of arithmetic, no token scan
+    Seq("x_f2_by_key", "x_f2_join_size", "x_f2_prod"),
+    // round 18: the anchor builds the memoized per-doc feature frame
+    // (one bigram explode) + the OVR weights; the confusion verdict
+    // rides both — one 5000-row scoring pass + a 25-cell aggregate
+    Seq("x_lang_trained", "x_lang_trained_eval"))
+
+  /** The riders: every chain entry after its head. */
+  val keepWarmQueries: Set[String] = chains.flatMap(_.tail).toSet
+
+  /** The chain anchors: every chain's head. */
+  val chainAnchors: Set[String] = chains.map(_.head).toSet
 
   /** Execution order shared by Bench, Verify, and TimeMany: sorted, with
-    * one deliberate exception — `x_dedup_clusters` runs immediately after
-    * `x_dedup_ngram` WITHOUT a cache flush in between, so it consumes the
-    * memoized pair frame the ngram entry just built and measures only the
-    * incremental component-solve cost (the production shape: pairs are
-    * computed once per corpus, then clustered in the same job).
-    *
-    * The `require` makes a rename of either query a loud failure instead
-    * of silently dropping clusters from every runner (ADVICE r3: the
-    * filterNot/flatMap pair is keyed on the literal names).
+    * each chain run whole, in its declared order, at its anchor's
+    * place. The `require` makes a rename of a chained query a loud
+    * failure instead of silently dropping it from every runner
+    * (ADVICE r3).
     */
   def orderedQueryNames: Seq[String] = {
-    val warmChain =
-      Seq("x_dedup_ngram", "x_dedup_clusters", "x_dedup_canonical", "x_dedup_apply",
-        "x_dedup_incremental", "x_dedup_containment", "x_split_leakage",
-        "x_quality_vs_dup", "x_source_overlap", "x_filter_funnel", "x_funnel_orders",
-        "x_dataset_card", "x_lsh_tuning", "x_mixture_dedup_adjusted",
-        "x_decontam_neardup", "x_dedup_edit")
-    val chunkChain = Seq("x_chunk_neardup", "x_chunk_clusters")
-    // round 14: the simhash block is a CONTINUATION of the ngram chain
-    // (not its own flush-isolated chain) — x_detector_overlap consumes
-    // the ngram pair frame AND the simhash fingerprint frame, so its
-    // increment is only honest with both warm
-    val simhashChain =
-      Seq("x_dedup_simhash_pairs", "x_dedup_simhash_clusters", "x_detector_overlap")
-    val ngramChain = warmChain ++ simhashChain
-    val lmChain = Seq("x_lm_score_lang", "x_ppl_buckets", "x_text_outliers")
-    // round 15: the trained-filter chain — the anchor fits the weights
-    // once (the memoized value artifact); the diagram and the
-    // temperature fit ride it and price only their own passes
-    val qualityChain =
-      Seq("x_quality_train", "x_quality_ablation", "x_quality_calibration",
-        "x_quality_temperature", "x_quality_pr", "x_filter_agreement",
-        // round 17: the A-ES weighted sample and its stratified twin
-        // ride the same memoized weight vector (qp is the weight)
-        "x_sample_weighted", "x_sample_weighted_by_key")
-    // round 15: the kpp-seeded IVF search rides the memoized k-means||
-    // training run the trajectory report just built
-    val kppChain = Seq("x_kmeans_scalable", "x_sim_ivf_kpp")
-    // and the probe report + nDCG verdict ride the memoized nprobe=8
-    // probe-candidate frame the operating curve anchors
-    val probeChain = Seq("x_sim_ivf_curve", "x_sim_ivf_probe", "x_rank_ndcg")
-    // round 16: the residual IVF-PQ pair shares one memoized training
-    // artifact (pqTrainedBooks) — anchor trains, the probe face rides
-    val pqChain = Seq("x_sim_ivf_pq", "x_sim_ivf_pq_probe")
-    // round 17: the kmv chain — the a-not-b and cardinality faces ride
-    // the overlap report's memoized truth-leg tok frame
-    val kmvChain = Seq("x_kmv_overlap", "x_kmv_diff", "x_kmv_card",
-      // round 18: the production sketch-only read closes the chain
-      "x_kmv_card_prod")
-    // round 17: the nsw chain — hierarchy and kNN-graph LexRank ride
-    // the flat search's memoized base graph + assignment
-    val nswChain = Seq("x_sim_nsw", "x_sim_nsw_hier", "x_lexrank_graph")
-    // round 17: the template chain — the cleaner rides the report's
-    // memoized (source, lh, df) frequency frame
-    val templateChain = Seq("x_template_lines", "x_template_apply")
-    // round 17: the f2 chain — the join-size estimator rides the
-    // grouped face's memoized per-source sign registers
-    val f2Chain = Seq("x_f2_by_key", "x_f2_join_size", "x_f2_prod")
-    // round 18: the trained language-ID pair — the anchor builds the
-    // memoized feature frame + weight vectors; the confusion verdict
-    // rides both
-    val langChain = Seq("x_lang_trained", "x_lang_trained_eval")
-    val allChains = ngramChain ++ chunkChain ++ lmChain ++ qualityChain ++
-      kppChain ++ probeChain ++ pqChain ++ kmvChain ++ nswChain ++
-      templateChain ++ f2Chain ++ langChain
-    require(allChains.forall(queries.contains),
-      s"ordered-run contract expects ${allChains.mkString(", ")} in " +
-        "SparkEntry.queries (rename them here and in keepWarmQueries together)")
+    require(chains.flatten.forall(queries.contains),
+      s"ordered-run contract expects ${chains.flatten.mkString(", ")} in " +
+        "SparkEntry.queries (rename them in `chains` too)")
+    val chainOf = chains.map(c => c.head -> c).toMap
     queries.keys.toSeq.sorted
       .filterNot(keepWarmQueries)
-      .flatMap {
-        case "x_dedup_ngram"          => ngramChain
-        case "x_chunk_neardup"        => chunkChain
-        case "x_lm_score_lang"        => lmChain
-        case "x_quality_train"        => qualityChain
-        case "x_kmeans_scalable"      => kppChain
-        case "x_sim_ivf_curve"        => probeChain
-        case "x_sim_ivf_pq"           => pqChain
-        case "x_kmv_overlap"          => kmvChain
-        case "x_sim_nsw"              => nswChain
-        case "x_template_lines"       => templateChain
-        case "x_f2_by_key"            => f2Chain
-        case "x_lang_trained"         => langChain
-        case n                        => Seq(n)
-      }
+      .flatMap(n => chainOf.getOrElse(n, Seq(n)))
   }
 
   /** DuckDB-runnable oracle SQL, one per `queries` key (same column
@@ -4261,12 +4142,11 @@ object SparkEntry {
   /** Seed-cell assignment CTE chain — e → cent (vec_id < 16) →
     * assigned(vec_id, v, cell_id) by rounded-cosine argmax with
     * cell_id tiebreak: the SQL twin of Similarity.seedCentroids +
-    * assignCells, shared by the semantic-clusters / purity / kNN /
-    * outlier oracles so the assignment contract lives in ONE place.
-    */
-  /** Round 15 split: `allrank` keeps EVERY (vector, cell) preference
-    * rank so the nprobe oracle can read ranks 1..nprobe; `assigned`
-    * (rank 1) is unchanged for every existing consumer.
+    * the NearestSeed kernel (assignCells and the nprobe lists), shared
+    * by the semantic-clusters / purity / kNN / outlier oracles so the
+    * assignment contract lives in ONE place. `allrank` keeps EVERY
+    * (vector, cell) preference rank so the nprobe oracle can read
+    * ranks 1..nprobe; `assigned` is rank 1.
     */
   private val seedRankCtes: String =
     """e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),

@@ -188,16 +188,22 @@ object Dedup {
       }
     }
 
-    /** Registers an ad-hoc persisted frame that cannot be unpersisted
-      * before its returned DataFrame is consumed (the kmv sketch/union-M
-      * frames, PageRank's loop-invariant edge frames) — ADVICE r21: bare
-      * `persist()` calls in report builders leaked block-manager entries
-      * until the ContextCleaner happened to GC the plan. The frame lives
-      * until the next [[releaseCaches]].
+    /** Persists and registers an ad-hoc frame that cannot be
+      * unpersisted before its returned DataFrame is consumed (the kmv
+      * sketch/union-M frames, PageRank's loop-invariant edge frames) —
+      * ADVICE r21: bare `persist()` calls in report builders leaked
+      * block-manager entries until the ContextCleaner happened to GC
+      * the plan. The frame lives until the next [[releaseCaches]]. A
+      * plan the CacheManager already holds (the same PageRank edges
+      * built twice over one memoized graph) reuses that entry: its
+      * owner's registration already releases it.
       */
     def trackPersist(df: DataFrame): DataFrame = memo.synchronized {
-      tracked += 1
-      memo.put((df.sparkSession, s"persist:$tracked"), ("", df))
+      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
+        df.persist()
+        tracked += 1
+        memo.put((df.sparkSession, s"persist:$tracked"), ("", df))
+      }
       df
     }
 

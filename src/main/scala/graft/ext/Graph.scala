@@ -89,11 +89,11 @@ object Graph {
     // checkpointRanks=true; the integer trajectory is join-strategy-
     // and partitioning-independent (decimal sums are exact), so the
     // numbers cannot move.
-    val edC = Dedup.Frames.trackPersist(ed.persist())
+    val edC = Dedup.Frames.trackPersist(ed)
     val deg = Dedup.Frames.trackPersist(
-      edC.groupBy(col("w1")).agg(sum(col("wt")).as("wdeg")).persist())
+      edC.groupBy(col("w1")).agg(sum(col("wt")).as("wdeg")))
     val edges = Dedup.Frames.trackPersist(
-      edC.join(broadcast(deg), "w1").repartition(col("w2")).persist())
+      edC.join(broadcast(deg), "w1").repartition(col("w2")))
     var rank = deg.select(col("w1").as("w"), lit(1000000L).as("r"))
     for (_ <- 1 to iters) {
       // r·wt widened to decimal(38,0) BEFORE the product (a bigint

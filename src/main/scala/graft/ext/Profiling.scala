@@ -1037,7 +1037,7 @@ object Profiling {
     // see the round-21 reversal note there (the a-not-b face
     // references the sketch in even more broadcast-child legs: the
     // scaffold, all three M-partition legs)
-    val sk = graft.ext.Dedup.Frames.trackPersist(kmvSketchFor(docs, k).persist())
+    val sk = graft.ext.Dedup.Frames.trackPersist(kmvSketchFor(docs, k))
     sk.count()
     val (pairs, m, mStats, nSrc, inter) = kmvPairScaffold(sk, tok, k)
     // Round 22 (VERDICT r21 #3): the union-sketch M is referenced by
@@ -1045,7 +1045,7 @@ object Profiling {
     // its own broadcast-child plan, so M's pair⋈sk re-aggregation ran
     // once per leg even with sk cached. |pairs|·k rows — eager persist
     // like sk, build once, legs read blocks.
-    graft.ext.Dedup.Frames.trackPersist(m.persist())
+    graft.ext.Dedup.Frames.trackPersist(m)
     m.count()
     // the three-way partition of M by sketch membership — the shared
     // kmvMPartition legs (A-only: equi-join on (source_a, h),
@@ -1332,14 +1332,14 @@ object Profiling {
     // still cannot cross broadcast/AQE subquery plan boundaries — so
     // the |sources|·k-row sketch is built once, eagerly, and the five
     // references read the cache (guide §2.4/§5).
-    val sk = graft.ext.Dedup.Frames.trackPersist(kmvSketchFor(docs, k).persist())
+    val sk = graft.ext.Dedup.Frames.trackPersist(kmvSketchFor(docs, k))
     sk.count()
     val (pairs, m, mStats, nSrc, inter) = kmvPairScaffold(sk, tok, k)
     // Round 22 (VERDICT r21 #3): M is referenced by mStats AND the
     // kmvMPartition overlap leg, each in its own broadcast-child plan —
     // the pair⋈sk union re-aggregation ran once per leg even with sk
     // cached. |pairs|·k rows — eager persist like sk.
-    graft.ext.Dedup.Frames.trackPersist(m.persist())
+    graft.ext.Dedup.Frames.trackPersist(m)
     m.count()
     val (mBoth, _, _) = kmvMPartition(sk, m)
     pairs
@@ -1598,7 +1598,7 @@ object Profiling {
     // plan-match the narrower cached subtree).
     val lv = graft.ext.Dedup.Frames.trackPersist(
       li.withColumn("lvl", qLevelCol)
-        .select(col("v"), col("rid"), col("lvl")).persist())
+        .select(col("v"), col("rid"), col("lvl")))
     val histRows = levelHist(lv).collect()
     val byLvl: Map[Long, Long] =
       histRows.map(r => (r.getLong(0), r.getLong(1))).toMap

@@ -241,23 +241,24 @@ object Similarity {
     graft.functions.GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
     // Centroids are a bounded K-row dimension (16 × 64 floats); fetch
-    // them once and inline as literals so cell assignment is a pure
-    // per-row argmax — zero shuffle, stays in whole-stage codegen. The
-    // round-1 plan (broadcast NLJ against `lit(true)` + a corpus-wide
-    // row_number window on vec_id) K×-inflated the corpus and shuffled
-    // all of it just to pick a max (VERDICT.md item 5).
+    // them once and hand them to the NearestSeed kernel so cell
+    // assignment is a pure per-row argmax — zero shuffle, stays in
+    // whole-stage codegen. The round-1 plan (broadcast NLJ against
+    // `lit(true)` + a corpus-wide row_number window on vec_id)
+    // K×-inflated the corpus and shuffled all of it just to pick a max
+    // (VERDICT.md item 5).
     val centroids: Array[(Long, Array[Float])] = seedCentroids(e, cells)
     ivfSearch(e, centroids, k)
   }
 
   /** The IVF search tail shared by the seed-centroid and k-means-refined
-    * paths: literal-inlined centroids → per-row argmax cell assignment
+    * paths: collected centroids → per-row argmax cell assignment
     * (struct ordering (−cos asc, cell_id asc) reproduces a window's
     * (cos desc, cell_id asc) tie-break exactly) → queries search only
     * their own cell → bounded top-k.
     */
-  /** The bounded seed-centroid fetch (≤`cells` rows, inlined as
-    * literals by every assignment) — ONE definition of the seed
+  /** The bounded seed-centroid fetch (≤`cells` rows, the reference
+    * matrix of every assignment) — ONE definition of the seed
     * contract shared by the IVF / SemDeDup / outlier / purity / kNN
     * faces and their streaming twins' specs. Any change to the seed
     * source, ordering, or types happens here once.
@@ -300,20 +301,16 @@ object Similarity {
     * leaves: x_sim_nsw 38.6 s at the floor's 16 cells vs 22.0 s at 64,
     * x_lexrank_graph 62.4 vs 34.6 s. The ideal build schedule is
     * LINEAR in n (fixed cell size ⇒ pair mass n·cellSize, linear) —
-    * but cell count is bounded by the literal-inline seeding mechanism
-    * ([[cellScoreArray]] materializes cells×dim literals per
-    * assignment expression; past ~1k cells codegen degrades), so
-    * linear growth is off the table at one seeding level. The adopted
+    * but every vector scores all K seeds at assignment
+    * ([[graft.functions.NearestSeed]] is linear in K), so a linear
+    * cell count would make assignment itself quadratic. The adopted
     * schedule is the same √ law at a 16×-DENSER target (64 instead of
     * 1024): 4× smaller asymptotic pair-mass constant
     * (n^1.5·√64 vs n^1.5·√1024), floor crossover at n = 16,384
     * instead of 262,144 — already past it at the 10× probe point —
     * while the seed count stays √-bounded (4× the search schedule's:
-    * ~3.9k seeds at n = 10⁹, the literal mechanism's edge; beyond
-    * that [[seedAssigned]] runs the compiled
-    * [[graft.functions.NearestSeed]] kernel, linear in K). Registered
-    * faces keep the oracle-pinned literal 16; production graph builds
-    * route through this.
+    * ~3.9k seeds at n = 10⁹). Registered faces keep the oracle-pinned
+    * 16; production graph builds route through this.
     */
   private[graft] def graphCellsFor(n: Long): Int = cellsFor(n, targetCellSize = 64L)
 
@@ -361,72 +358,38 @@ object Similarity {
     Dedup.Frames.getOrCompute(spark, s"cellassign:$cells:$dir", dir,
         tables = Seq("embeddings.parquet")) {
       val e = Tables.embeddings(spark, dir)
-      // past the single-level literal edge, the compiled kernel
-      // computes the IDENTICAL argmax (bit-equality spec-asserted)
-      // with O(1) generated code in K
-      if (cells > SingleLevelCellEdge) assignCellsKernel(e, seedCentroids(e, cells))
-      else assignCells(e, seedCentroids(e, cells))
+      assignCells(e, seedCentroids(e, cells))
     }
 
-  /** Literal-centroid cell assignment shared by the IVF paths and
-    * [[semanticDedup]]: inline the bounded K-row centroid set as
-    * literals so assignment is a pure per-row argmax — zero shuffle,
-    * whole-stage codegen (struct ordering (−cos asc, cell_id asc)
-    * reproduces a window's (cos desc, cell_id asc) tie-break exactly).
-    * Adds `cell_id` and `cos_centroid` (the winning rounded cosine).
+  /** The per-row `n` nearest centroids, best first: one
+    * [[graft.functions.NearestSeed]] expression,
+    * array<struct(neg_cos, cell_id)> ordered by (−cos asc, cell_id
+    * asc). The ONE definition of "nearest centroids" — the argmax
+    * assignment is its first entry and every nprobe probe list its
+    * prefix, so "probe rank 1 IS the assignment" holds by
+    * construction. The centroid matrix is a reference object of the
+    * generated code, never a literal in it, so every K and every
+    * centroid set shares one compiled class.
     */
-  /** The per-row (−cos, cell_id) preference array over literal
-    * centroids — ONE definition (review r15) shared by the argmax
-    * assignment and the nprobe probe-list slice, so "probe rank 1 IS
-    * the classic assignment" holds by construction, not by two copies
-    * staying in sync.
-    */
-  private def cellScoreArray(centroids: Array[(Long, Array[Float])]): Column =
-    array(centroids.toIndexedSeq.map { case (cellId, cv) =>
-      struct(
-        (-round(cosine(col("embedding"), typedLit(cv)), 6)).as("neg_cos"),
-        lit(cellId).as("cell_id"))
-    }: _*)
+  private[graft] def nearestCells(spark: SparkSession,
+      centroids: Array[(Long, Array[Float])], n: Int): Column = {
+    graft.functions.GraftFunctions.register(spark)
+    graft.functions.GraftFunctions.nearestSeed(
+      col("embedding"), centroids.map(_._1), centroids.flatMap(_._2), n)
+  }
 
-  private[graft] def assignCells(df: DataFrame, centroids: Array[(Long, Array[Float])]): DataFrame = {
-    val scoredCells = cellScoreArray(centroids)
-    df.withColumn("best_cell", array_min(scoredCells))
+  /** Nearest-centroid cell assignment shared by the IVF paths,
+    * [[semanticDedup]], the streaming routers and [[seedAssigned]]: a
+    * pure per-row argmax — zero shuffle (the (−cos asc, cell_id asc)
+    * order reproduces a window's (cos desc, cell_id asc) tie-break
+    * exactly). Adds `cell_id` and `cos_centroid` (the winning rounded
+    * cosine).
+    */
+  private[graft] def assignCells(df: DataFrame, centroids: Array[(Long, Array[Float])]): DataFrame =
+    df.withColumn("best_cell", nearestCells(df.sparkSession, centroids, 1).getItem(0))
       .withColumn("cell_id", col("best_cell").getField("cell_id"))
       .withColumn("cos_centroid", -col("best_cell").getField("neg_cos"))
       .drop("best_cell")
-  }
-
-  /** The single-level edge of the literal-inline seeding mechanism:
-    * BASELINE.md's "Round 20 seed-assignment A/B past the literal
-    * edge" table (10× corpus) measured the literal forms leaving
-    * whole-stage codegen on this corpus (the 64 KB method limit) and
-    * degrading superlinearly past it (single-level 17.5 s cold at 512
-    * cells, 35.3 at 1024, 132.5 at 2048), so [[seedAssigned]] routes
-    * through the compiled-kernel [[graft.functions.NearestSeed]] path
-    * beyond this edge — linear in K, identical checksums.
-    */
-  private[graft] val SingleLevelCellEdge = 512
-
-  /** The COMPILED-KERNEL assignment (round 20) — the adopted path past
-    * [[SingleLevelCellEdge]]: one [[graft.functions.NearestSeed]]
-    * expression carrying the centroid matrix as a reference object, so
-    * generated code is O(1) in K and the kernel stays compiled at any
-    * cell count (10× corpus: 2048 cells in ~21 s where the literal
-    * forms run interpreted past 100 s — BASELINE.md's
-    * "Round 20 seed-assignment A/B past the literal edge" table).
-    * Bit-equal to [[assignCells]] by the kernel's arithmetic contract
-    * (CosineSim accumulation, Spark round-6, SQL double total order,
-    * smaller-id ties) — spec-asserted.
-    */
-  private[graft] def assignCellsKernel(df: DataFrame, centroids: Array[(Long, Array[Float])]): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    val best = graft.functions.GraftFunctions.nearestSeed(
-      col("embedding"), centroids.map(_._1), centroids.flatMap(_._2))
-    df.withColumn("best_cell", best)
-      .withColumn("cell_id", col("best_cell").getField("cell_id"))
-      .withColumn("cos_centroid", -col("best_cell").getField("neg_cos"))
-      .drop("best_cell")
-  }
 
   /** The cell-restricted scoring kernel behind every single-cell
     * search face (round-15 review: one definition of the search
@@ -508,7 +471,7 @@ object Similarity {
   /** The probed candidate frame shared by [[ivfProbeReport]] and
     * [[annNdcgReport]] (one definition of "what nprobe search sees"):
     * each query row explodes into its top-`nprobe` probe cells (the
-    * prefix of the same struct sort [[assignCells]] argmax-reduces),
+    * prefix of [[nearestCells]], whose first entry IS [[assignCells]]),
     * candidates come from ONE equi-join on cell_id, and `cos` is the
     * rounded scoring cosine. Columns: query_id, qv, probe_rank,
     * cell_id, vec_id (candidate), cos.
@@ -517,7 +480,7 @@ object Similarity {
       isQuery: Column, nprobe: Int): DataFrame = {
     val assigned = assignCells(e, centroids).drop("cos_centroid")
     val probes = e.filter(isQuery)
-      .withColumn("probes", slice(array_sort(cellScoreArray(centroids)), 1, nprobe))
+      .withColumn("probes", nearestCells(e.sparkSession, centroids, nprobe))
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         posexplode(col("probes")).as(Seq("pos", "p")))
       .select(col("query_id"), col("qv"),
@@ -586,8 +549,8 @@ object Similarity {
     * candidate counts (the COST) and recall@k (the BENEFIT) for both
     * the single-cell leg and the nprobe=4 leg.
     *
-    * Exactness: the probe list is the top-`nprobe` prefix of the same
-    * (−cos, cell_id) struct sort that [[assignCells]] argmax-reduces —
+    * Exactness: the probe list is the top-`nprobe` (−cos, cell_id)
+    * [[nearestCells]] list whose first entry is [[assignCells]] —
     * probe rank 1 IS the classic assignment, so the single-cell leg is
     * [[ivfSearch]] by construction; index vectors live in exactly one
     * cell and probe cells are distinct, so no candidate duplicates
@@ -815,7 +778,7 @@ object Similarity {
   }
 
   /** IVF-PQ ANN (x_sim_pq): the FAISS IVF-PQ composition — coarse cell
-    * restriction (the [[assignCells]] literal-centroid argmax shared
+    * restriction (the [[assignCells]] nearest-centroid argmax shared
     * with [[ivfTopK]]) + product-quantized codes scored by asymmetric
     * distance (ADC, Jégou et al., "Product Quantization for Nearest
     * Neighbor Search", TPAMI 2011). This is THE 100 TB vector-search
@@ -874,8 +837,8 @@ object Similarity {
     // asserted) — (dist ASC, code ASC), SqDistL2 accumulation order,
     // round-6 before compare. The literal form generated fresh janino
     // source per book set and hits the 64 KB codegen wall at
-    // production m·ksub — the exact cliff NearestSeed retired for
-    // coarse assignment at K>512 (VERDICT r20 #1).
+    // production m·ksub — the cliff NearestSeed retired for coarse
+    // assignment (VERDICT r20 #1).
     val encoded = assignCells(e, seeds.zipWithIndex.map { case (v, i) => (i.toLong, v) })
       .drop("cos_centroid")
       .withColumn("codes",
@@ -1045,7 +1008,8 @@ object Similarity {
     * [[graft.functions.PqEncode]] kernel; this literal-expression form
     * is retained as the independent REFERENCE the spec's
     * bit-equality assertion compares the kernel against (the
-    * NearestSeed-vs-cellScoreArray convention).
+    * kernel-vs-literal-reference convention the NearestSeed specs
+    * follow).
     */
   private[graft] def residCodeFor(bk: Array[Array[Array[Double]]])(j: Int): Column = {
     val sq = graft.functions.GraftFunctions.sqDistL2 _
@@ -1060,7 +1024,7 @@ object Similarity {
   /** Row-local IVF-PQ INDEXING of a vector frame against a standing
     * index's literal artifacts — the streaming ANN router (this def on
     * a streaming frame) and the spec's batch-agreement assertion:
-    * assign the coarse cell (literal centroid argmax), form the
+    * assign the coarse cell (nearest-centroid argmax), form the
     * residual, encode the residual against the literal trained books,
     * and report the per-row ADC quantization error. Pure projection: no
     * state, no shuffle, no join — exactly what FAISS `IndexIVFPQ::add`
@@ -1219,14 +1183,14 @@ object Similarity {
     val (enc, books, centsD) = pqResidualTrained(spark, dir, m, ksub, iters)
     // centsD is the seed set sorted by cell id with exact float→double
     // widening, so narrowing back to float is lossless and the probe
-    // ranking below scores the SAME literal centroids the assignment did
+    // ranking below scores the SAME centroids the assignment did
     val seeds: Array[(Long, Array[Float])] =
       centsD.zipWithIndex.map { case (v, i) => (i.toLong, v.map(_.toFloat)) }
     val vd = col("embedding").cast("array<double>")
     val e = Tables.embeddings(spark, dir)
     val isQuery = col("vec_id") >= qLo && col("vec_id") < qHi
     val probes = e.filter(isQuery)
-      .withColumn("probes", slice(array_sort(cellScoreArray(seeds)), 1, nprobe))
+      .withColumn("probes", nearestCells(spark, seeds, nprobe))
       .select(col("vec_id").as("query_id"), vd.as("qv"),
         posexplode(col("probes")).as(Seq("pos", "p")))
       .select(col("query_id"), col("qv"), col("p").getField("cell_id").as("pcell"))
@@ -1353,7 +1317,7 @@ object Similarity {
       col("cell_id").cast("int") + 1)
     // The residual FRAME is NOT memoized, deliberately (measured round
     // 14): each pass over it is pure codegen over the scan —
-    // literal-centroid argmax + one zip_with — while persisting it
+    // nearest-centroid argmax + one zip_with — while persisting it
     // materializes corpus × dim double arrays through the block store.
     // Measured at sf0.1: memoized 10.4 s vs recomputed 5.2 s
     // standalone — recompute wins for wide-array projections (the
@@ -1376,7 +1340,7 @@ object Similarity {
     * hard ones live at the decision boundary this query finds.
     *
     * Shape: candidates come from the query's IVF cell (the
-    * [[assignCells]] literal-centroid argmax — in production you mine
+    * [[assignCells]] nearest-centroid argmax — in production you mine
     * hard negatives from the ANN candidate set, not the full corpus,
     * and this query IS that composition), so the scoring join is EQUI
     * on cell_id with the label-mismatch as a residual filter — no
@@ -1407,8 +1371,8 @@ object Similarity {
     * non-increasing per iteration, Lloyd's convergence guarantee.
     *
     * Scale shape per iteration: one broadcast of k centroids (k·dim
-    * floats — literal-inlined, zero shuffle for assignment, same as
-    * ivfTopK), one groupBy(cell) aggregate of per-dim sums via
+    * floats — the kernel's reference matrix, zero shuffle for
+    * assignment, same as ivfTopK), one groupBy(cell) aggregate of per-dim sums via
     * `posexplode` — shuffle carries k·dim partial sums per partition,
     * never vectors — and one bounded k-row collect. Empty cells keep
     * their previous centroid (the standard dead-centroid rule).
@@ -1503,7 +1467,7 @@ object Similarity {
     * pileups and is replayed identically by the oracle).
     *
     * 100 TB shape: per round ONE scan against ≤(1 + rounds·cap)
-    * literal candidates (row-local codegen argmin, map-side-partial
+    * candidates (row-local [[assignCells]] kernel argmin, map-side-partial
     * sum for φ) + one ≤cap-row collect; the weighting pass is one
     * more scan into a bounded hash aggregate. No corpus-sized
     * shuffle anywhere — this is precisely why k-means|| exists.
@@ -1532,7 +1496,7 @@ object Similarity {
         e.filter(pred).collect()
           .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
       def dm2For(c: Array[(Long, Array[Float])]): Column = {
-        val dm = round((array_min(cellScoreArray(c)).getField("neg_cos") + lit(1.0)) * 1e6, 0)
+        val dm = round((nearestCells(spark, c, 1).getItem(0).getField("neg_cos") + lit(1.0)) * 1e6, 0)
           .cast("long")
         dm * dm
       }
@@ -1560,7 +1524,7 @@ object Similarity {
       // weight candidates by attracted corpus mass (argmin assignment,
       // ties to the smaller candidate id — the assignCells tie-break)
       val weights = e
-        .withColumn("cid", array_min(cellScoreArray(cand)).getField("cell_id"))
+        .withColumn("cid", nearestCells(spark, cand, 1).getItem(0).getField("cell_id"))
         .groupBy(col("cid")).agg(count(lit(1)).as("w"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       val fin = cand.sortBy { case (id, _) => (-weights.getOrElse(id, 0L), id) }.take(k)
@@ -1681,7 +1645,7 @@ object Similarity {
     * the pair join is an equi-join on `cell_id`, so candidate pairs are
     * bounded per cell instead of corpus-quadratic. At 100 TB the cell
     * count grows with the corpus (the paper's regime: K ~ N/avg-cell,
-    * keeping cells O(thousands of vectors)); here K=16 literal
+    * keeping cells O(thousands of vectors)); here K=16 seed
     * centroids keep the assignment a zero-shuffle codegen'd argmax
     * ([[assignCells]]) and the whole query engine-portable for the
     * DuckDB oracle. A production build swaps in [[kmeansRefine]]'s
@@ -2154,13 +2118,12 @@ object Similarity {
     * one truncating integer division ((b−a)·10⁶ div max(a,b), both
     * operands nonnegative), and the per-cell mean is an exact integer
     * sum divided once — the x_embed_outliers micro-unit discipline.
-    * a and b come from ranks 1–2 of the SAME (−cos, cell_id) struct
-    * sort [[assignCells]] argmax-reduces (the cellScoreArray contract)
-    * so "own centroid" here is bit-identical to every other 16-cell
-    * face's assignment.
+    * a and b are ranks 1–2 of [[nearestCells]], whose rank 1 IS
+    * [[assignCells]], so "own centroid" here is bit-identical to every
+    * other 16-cell face's assignment.
     *
-    * 100 TB shape: one narrow scan with a k-literal score array (pure
-    * row-local codegen, zero shuffle) into a k-row hash aggregate with
+    * 100 TB shape: one narrow scan with the row-local top-2 kernel
+    * (zero shuffle) into a k-row hash aggregate with
     * map-side partials. Nothing vector-scale shuffles.
     */
   def clusterSilhouette(spark: SparkSession, dir: String, cells: Int = 16): DataFrame = {
@@ -2168,7 +2131,7 @@ object Similarity {
     val e = Tables.embeddings(spark, dir)
     val centroids = seedCentroids(e, cells)
     // ranks 1–2 of the assignment sort: element 1 IS the argmax cell
-    val top2 = slice(array_sort(cellScoreArray(centroids)), 1, 2)
+    val top2 = nearestCells(spark, centroids, 2)
     def distMicro(s: Column): Column =
       round((s.getField("neg_cos") + lit(1.0)) * 1e6, 0).cast("long")
     val rows = e.withColumn("t2", top2)

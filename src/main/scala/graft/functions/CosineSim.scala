@@ -257,7 +257,7 @@ object GraftFunctions {
     if (!reg.functionExists(FunctionIdentifier("nearest_seed")))
       reg.createOrReplaceTempFunction(
         "nearest_seed",
-        exprs => NearestSeed(exprs(0), longArrayLit(exprs(1)), floatArrayLit(exprs(2))),
+        exprs => NearestSeed(exprs(0), longArrayLit(exprs(1)), floatArrayLit(exprs(2)), intLit(exprs(3))),
         "scala_udf")
     if (!reg.functionExists(FunctionIdentifier("char_window_md5")))
       reg.createOrReplaceTempFunction(
@@ -394,17 +394,18 @@ object GraftFunctions {
   /** Fused squared-L2 distance of two double arrays (oracle-bit-exact). */
   def sqDistL2(a: Column, b: Column): Column = call_function("sq_dist_l2", a, b)
 
-  /** Compiled nearest-seed argmax over a flattened centroid matrix —
-    * struct(neg_cos, cell_id), bit-equal to
-    * `array_min(cellScoreArray(...))` (see [[NearestSeed]]). The
-    * matrix/ids travel as array literals only to cross the
+  /** The `n` nearest centroids of a flattened centroid matrix, best
+    * first — array<struct(neg_cos, cell_id)> (see [[NearestSeed]]).
+    * The matrix/ids travel as array literals only to cross the
     * FunctionRegistry boundary; the expression folds them into
-    * reference objects, so generated code stays O(1) in K.
+    * reference objects, so the generated code is the same for every
+    * centroid set.
     */
-  def nearestSeed(emb: Column, cellIds: Array[Long], matrix: Array[Float]): Column =
+  def nearestSeed(emb: Column, cellIds: Array[Long], matrix: Array[Float], n: Int): Column =
     call_function("nearest_seed", emb,
       org.apache.spark.sql.functions.typedLit(cellIds),
-      org.apache.spark.sql.functions.typedLit(matrix))
+      org.apache.spark.sql.functions.typedLit(matrix),
+      org.apache.spark.sql.functions.lit(n))
 
   /** All w-token window hashes of a string, in window order. */
   def tokenWindowHashes(s: Column, w: Int): Column =

@@ -19,9 +19,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * every distinct trained book set generates fresh janino source, each
   * `slice` materializes a sub-element array per candidate, and at
   * production m/ksub the projection crosses the 64 KB whole-stage-
-  * codegen method limit exactly as seed assignment did at K>512
-  * (BASELINE.md, "Round 20 seed-assignment A/B past the literal
-  * edge"). This kernel's generated code is a
+  * codegen method limit exactly as literal seed assignment did at a
+  * few hundred cells (BASELINE.md, "Round 20 seed-assignment A/B past
+  * the literal edge"). This kernel's generated code is a
   * fixed-size triple loop, whatever m·ksub is.
   *
   * Bit-equivalence contract with the literal form (spec-asserted):

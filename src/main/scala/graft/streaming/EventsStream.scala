@@ -247,7 +247,7 @@ object EventsStream {
   /** Streaming SEMANTIC dedup candidates (round 10 — the SemDeDup twin
     * of [[nearDupCandidates]]/[[imageNearDupCandidates]]): embeddings
     * arriving on a stream are assigned to their nearest-centroid cell
-    * by the SAME literal-centroid codegen argmax as the batch path
+    * by the SAME nearest-centroid kernel as the batch path
     * ([[graft.ext.Similarity.assignCells]] — stateless, streaming-safe),
     * and each cell keeps ONE stateful owner: the first vector that ever
     * landed there. Every later arrival in an owned cell is emitted as a
@@ -1066,10 +1066,11 @@ object EventsStream {
     * per-cell (mean, stddev) and flag z ≤ −2 before the vector enters
     * the store — mis-embedded rows get quarantined at the door
     * instead of poisoning the nightly ANN build. Centroids and the
-    * k-row stats are batch artifacts broadcast as literals; the
-    * assignment is the SAME [[graft.ext.Similarity.assignCells]]
-    * projection the batch ran, so cell choice and cosine are
-    * bit-identical. PURE row-local: no state, no shuffle.
+    * k-row stats are batch artifacts (the centroids as the kernel's
+    * reference matrix, the stats as literals); the assignment is the
+    * SAME [[graft.ext.Similarity.assignCells]] projection the batch
+    * ran, so cell choice and cosine are bit-identical. PURE
+    * row-local: no state, no shuffle.
     *
     * `mu`/`sd` are dense arrays indexed by cell_id (the seed cells
     * are vec_id 0..k−1 by construction); a singleton or

@@ -15,7 +15,7 @@ object EpsOnly {
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val reps = if (args.length > 1) args(1).toInt else 3
-    val spark = Smoke.session("32")
+    val spark = graft.Session.local("32")
     Bench.warmIngest(spark, dir)
     (1 to reps).foreach { i =>
       val l0 = Bench.loadavg1()

@@ -14,7 +14,7 @@ object Explain {
       else Seq("q1_pricing_summary", "q2_filter_project", "q3_topn_orders",
                "q4_star_join", "q13_range_join", "logs_timerange",
                "x_sim_topk", "x_dedup_ngram")
-    val spark = Smoke.session()
+    val spark = graft.Session.local("8")
     val out = new java.io.PrintWriter("/tmp/graft_explain.txt")
     names.foreach { n =>
       SparkEntry.queries.get(n).foreach { fn =>

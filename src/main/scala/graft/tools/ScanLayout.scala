@@ -11,7 +11,7 @@ object ScanLayout {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val openCost = if (args.length > 1) args(1) else "4194304"
-    val spark = Smoke.session("32")
+    val spark = graft.Session.local("32")
     spark.conf.set("spark.sql.files.openCostInBytes", openCost)
     val conf = spark.sparkContext.hadoopConfiguration
     graft.Tables.names.foreach { t =>

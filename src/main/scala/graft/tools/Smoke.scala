@@ -1,28 +1,14 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.Tables
 
 /** Dev-only smoke runner: prints schema + a few rows per table and runs
   * each SparkEntry query at the given sf. Not part of the driver contract.
   */
 object Smoke {
-  def session(cpus: String = "8"): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-smoke")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = session()
+    val spark = graft.Session.local("8")
     Tables.names.foreach { t =>
       val df = Tables.load(spark, dir, t)
       println(s"=== $t ${df.count()} rows")

@@ -11,7 +11,7 @@ object TimeMany {
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     // honors the bench's core-count knob so scale probes can compare
     // low/high-core walls (round 22); default matches the bench's 32
-    val spark = Smoke.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = graft.Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     // same warmup as Bench
     graft.SparkEntry.queries("q1_pricing_summary")(spark, graft.Bench.warmDir(dir))
       .write.format("noop").mode("overwrite").save()

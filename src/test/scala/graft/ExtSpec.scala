@@ -3640,21 +3640,40 @@ class ExtSpec extends SparkSpec {
     Dedup.releaseCaches()
   }
 
+  /** (vec_id, [(neg_cos bits, cell_id)]) per row of a top-n list
+    * column, sorted by vec_id — compared as bits, so NaN and signed
+    * zeros must match exactly.
+    */
+  private def topRows(df: org.apache.spark.sql.DataFrame, list: org.apache.spark.sql.Column) =
+    df.select(col("vec_id"), list.as("t")).collect()
+      .map(r => (r.getLong(0), r.getSeq[org.apache.spark.sql.Row](1).map(s =>
+        (java.lang.Double.doubleToLongBits(s.getDouble(0)), s.getLong(1)))))
+      .sortBy(_._1).toSeq
+
+  private def assignedRows(df: org.apache.spark.sql.DataFrame) = df
+    .select(col("vec_id"), col("cell_id"), col("cos_centroid"))
+    .collect().map(r => (r.getLong(0), r.getLong(1),
+      java.lang.Double.doubleToLongBits(r.getDouble(2)))).sortBy(_._1).toSeq
+
   test("seed kernel equals the literal single-level assignment at every probed cell count") {
     // probe square, non-square, and cells == n shapes
     val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
     for (cells <- Seq(1, 16, 37, 100, 500)) {
       val cents = Similarity.seedCentroids(e, cells)
-      def rows(df: org.apache.spark.sql.DataFrame) = df
-        .select(col("vec_id"), col("cell_id"), col("cos_centroid"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1).toSeq
-      val one = rows(Similarity.assignCells(e, cents))
-      // the compiled kernel (the adopted big-K path) must be bit-equal:
-      // CosineSim accumulation + Spark round-6 + SQL double total
-      // order + smaller-id ties, per NearestSeed's contract
-      val kern = rows(Similarity.assignCellsKernel(e, cents))
-      assert(one == kern, s"cells=$cells: kernel diverged from 1L at " +
-        one.zip(kern).collectFirst { case (a, b) if a != b => s"$a vs $b" }.getOrElse("?"))
+      // the assignment is the kernel's first entry: bit-equal to the
+      // literal argmax (CosineSim accumulation + Spark round-6 + SQL
+      // double order + smaller-id ties, per NearestSeed's contract)
+      val kern1 = assignedRows(Similarity.assignCells(e, cents))
+      val lit1 = LiteralCells.unfused(spark)(assignedRows(LiteralCells.assign(e, cents)))
+      assert(kern1 == lit1, s"cells=$cells: assignment diverged from the literal form at " +
+        kern1.zip(lit1).collectFirst { case (a, b) if a != b => s"$a vs $b" }.getOrElse("?"))
+      for (n <- Seq(1, 2, 4, 8)) {
+        val kern = topRows(e, Similarity.nearestCells(spark, cents, n))
+        val ref = LiteralCells.unfused(spark)(topRows(e, LiteralCells.topN(cents, n)))
+        assert(kern.forall(_._2.length == math.min(n, cells)), s"cells=$cells n=$n: list length")
+        assert(kern == ref, s"cells=$cells n=$n: kernel diverged from the literal top-n at " +
+          kern.zip(ref).collectFirst { case (a, b) if a != b => s"$a vs $b" }.getOrElse("?"))
+      }
     }
   }
 
@@ -3665,7 +3684,7 @@ class ExtSpec extends SparkSpec {
     // input), so the literal form ranks such candidates (NaN sorts
     // greatest; an all-NaN row falls to the smallest cell_id). The
     // kernel must not crash where the literal form ranks, and must
-    // pick the identical cell.
+    // produce the identical list.
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
     import scala.jdk.CollectionConverters._
@@ -3678,23 +3697,42 @@ class ExtSpec extends SparkSpec {
       Row(3L, Seq(0.0f, 0.0f, 0.0f, 0.0f)), // zero norm -> NaN cosine
       Row(4L, Seq.empty[Float]))            // empty -> NaN cosine
     val df = spark.createDataFrame(data.asJava, schema)
+    // listed out of id order: ties must still go to the smaller id
     val cents = Array(
-      (0L, Array(1.0f, 0.0f, 0.0f, 0.0f)),
-      (1L, Array(0.0f, 1.0f, 0.0f, 0.0f)))
-    def got(d: org.apache.spark.sql.DataFrame) = d
-      .select(col("vec_id"), col("cell_id"), col("cos_centroid"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1).toSeq
-    val lit = got(Similarity.assignCells(df, cents))
-    val kern = got(Similarity.assignCellsKernel(df, cents))
-    assert(lit.length == 4 && kern.length == 4)
-    lit.zip(kern).foreach { case ((i1, c1, s1), (i2, c2, s2)) =>
-      assert(i1 == i2 && c1 == c2, s"row $i1: literal cell $c1 vs kernel cell $c2")
-      assert(s1 == s2 || (s1.isNaN && s2.isNaN), s"row $i1: literal cos $s1 vs kernel $s2")
-    }
+      (1L, Array(0.0f, 1.0f, 0.0f, 0.0f)),
+      (0L, Array(1.0f, 0.0f, 0.0f, 0.0f)))
+    val lit = assignedRows(LiteralCells.assign(df, cents))
+    val kern = assignedRows(Similarity.assignCells(df, cents))
+    assert(lit.length == 4 && kern == lit, s"literal $lit vs kernel $kern")
     // the degenerate rows carry NaN in BOTH paths and fall to cell 0
-    lit.filter(_._1 >= 3L).foreach { case (id, cell, cos) =>
-      assert(cos.isNaN && cell == 0L, s"degenerate row $id: ($cell, $cos)")
+    kern.filter(_._1 >= 3L).foreach { case (id, cell, cos) =>
+      assert(java.lang.Double.isNaN(java.lang.Double.longBitsToDouble(cos)) && cell == 0L,
+        s"degenerate row $id: ($cell, $cos)")
     }
+    // top-n, including n > K: every list is min(n, K) long and NaN rows
+    // list every cell in id order
+    for (n <- Seq(1, 2, 4, 8)) {
+      val k = topRows(df, Similarity.nearestCells(spark, cents, n))
+      val r = topRows(df, LiteralCells.topN(cents, n))
+      assert(k == r, s"n=$n: literal $r vs kernel $k")
+      assert(k.forall(_._2.length == math.min(n, 2)))
+      k.filter(_._1 >= 3L).foreach { case (id, l) =>
+        assert(l.map(_._2) == Seq(0L, 1L).take(n), s"n=$n degenerate row $id: $l")
+      }
+    }
+  }
+
+  test("nearest-centroid kernel: a second centroid set of a different K starts no new Janino compile") {
+    val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val first = Similarity.seedCentroids(e, 16)
+    val second = Similarity.seedCentroids(e, 37)
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    assignedRows(Similarity.assignCells(e, first))
+    val before = compiles.getCount
+    val got = assignedRows(Similarity.assignCells(e, second))
+    assert(compiles.getCount == before,
+      s"${compiles.getCount - before} Janino compile(s) for a new centroid set")
+    assert(got.map(_._2).distinct.length > 16, "the second set must actually be used")
   }
 
   test("lexrank: top-10 centrality equals a plain-Scala integer PageRank replay over the cell graph") {
@@ -3854,11 +3892,19 @@ class ExtSpec extends SparkSpec {
     // at every test corpus size
     val dir = "/root/testdata/sf0.001"
     val auto = Similarity.nswSearchAuto(spark, dir).collect().toSeq
-    val fixed = Similarity.nswSearch(spark, dir).collect().toSeq
-    assert(auto == fixed, "nswSearchAuto diverged from the pinned face at the floor")
     val autoLex = Similarity.lexRankGraphAuto(spark, dir).collect().toSeq
+    // the pinned pass computes exactly what the auto pass just cached:
+    // it must reuse every entry, adding none to the store (a duplicate
+    // registration of a cached plan) or to the CacheManager
+    val keys = Dedup.Frames.residentKeys(spark)
+    val cached = org.apache.spark.sql.CachedEntries.count(spark)
+    val fixed = Similarity.nswSearch(spark, dir).collect().toSeq
     val fixedLex = Similarity.lexRankGraph(spark, dir).collect().toSeq
+    assert(auto == fixed, "nswSearchAuto diverged from the pinned face at the floor")
     assert(autoLex == fixedLex, "lexRankGraphAuto diverged from the pinned face at the floor")
+    val dup = Dedup.Frames.residentKeys(spark) -- keys
+    assert(dup.isEmpty && org.apache.spark.sql.CachedEntries.count(spark) == cached,
+      s"the pinned pass re-registered cached plans: $dup")
     Dedup.releaseCaches()
   }
 

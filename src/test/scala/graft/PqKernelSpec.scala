@@ -8,7 +8,7 @@ import graft.functions.GraftFunctions
 /** Bit-equality contract of the round-21 compiled PQ kernels
   * ([[graft.functions.PqEncode]], [[graft.functions.AdcScore]])
   * against the literal expression forms they replaced — the
-  * NearestSeed-vs-cellScoreArray convention applied to PQ encode/ADC
+  * NearestSeed-vs-[[LiteralCells]] convention applied to PQ encode/ADC
   * (VERDICT r20 #1). The literal forms stay in the codebase purely as
   * the independent reference these assertions compare against.
   */

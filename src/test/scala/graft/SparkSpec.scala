@@ -8,14 +8,7 @@ import org.scalatest.BeforeAndAfterAll
   * reuses the context across suites via getOrCreate.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local("4")
 
   override def afterAll(): Unit = {
     // keep the session alive for other suites in the same JVM

@@ -1219,7 +1219,9 @@ class StreamingSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val e = graft.Tables.embeddings(spark, dir)
     val (seeds, _) = graft.ext.Similarity.kmeansParallelTrain(spark, dir)
-    val batch = graft.ext.Similarity.assignCellsKernel(e, seeds)
+    // the batch side is the independent literal reference, so the
+    // replay-equals-batch leg compares two implementations
+    val batch = graft.LiteralCells.assign(e, seeds)
       .select(col("vec_id"), col("cell_id"), col("cos_centroid"))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
     // the foreachBatch body over one "arriving" micro-batch = the corpus

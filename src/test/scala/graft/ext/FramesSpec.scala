@@ -102,7 +102,7 @@ class FramesSpec extends graft.SparkSpec {
       s"a rewritten table must replace its decision, not add one: $widenKeys")
 
     Dedup.Frames.getOrComputeValue(spark, s"spec_val:$dir", dir)(42)
-    val tracked = Dedup.Frames.trackPersist(spark.range(10).toDF("x").persist())
+    val tracked = Dedup.Frames.trackPersist(spark.range(10).toDF("x"))
     assert(tracked.storageLevel != StorageLevel.NONE)
     assert(Dedup.Frames.residentKeys(spark).contains(s"spec_val:$dir"))
     Dedup.releaseCaches()
