@@ -27,6 +27,8 @@ import org.apache.spark.sql.SparkSession
   *     incremental keep-warm chain) bracketed by its own loadavg
   *     samples — an in-artifact witness of the chain's steady cost even
   *     when the full sweep hits load.
+  *   - `compiles_rep1`, `compiles_rep2`: the Janino compiles each
+  *     query started in that rep, and `compiles_rep2_total`.
   * The headline `value` stays `total_steady` (the r8 convention; both
   * totals are present so adjudication keys on them explicitly).
   *
@@ -235,7 +237,10 @@ object Bench {
     // dedup entry warms the eval-based shingle/aggregate paths too
     // (CodegenFallback expressions and TypedImperativeAggregates JIT on
     // first execution — measured 8.5 s -> 2-4 s on x_dedup_minhash at
-    // sf0.1 between a JVM's first and second run).
+    // sf0.1 between a JVM's first and second run). The sf0.001 sibling
+    // runs interpreted (Tables.InterpretedMaxBytes), so the warm-up JITs
+    // the interpreted path and leaves a compiled dir's first compiles
+    // to rep 1; the per-query min over reps keeps them out of steady.
     Seq("q1_pricing_summary", "x_dedup_minhash").foreach { name =>
       SparkEntry.queries.get(name)
         .foreach(fn => fn(spark, warmDir(sfDir)).write.format("noop").mode("overwrite").save())
@@ -264,12 +269,22 @@ object Bench {
       timer.time(name)(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
         .getOrElse(0.0)
     }
+    // Janino compiles each query started, per rep: the change in the
+    // count of Spark's own compile-time histogram across the run (one
+    // JVM, so task-side compiles count too). Rep 2 shows what the
+    // codegen cache (`spark.sql.codegen.cache.maxEntries`) misses.
+    val compileCount = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val compiles = scala.collection.mutable.Map.empty[String, Seq[(String, Long)]]
     def runAll(repLabel: String): Seq[(String, Double)] = {
       loadSamples += (s"${repLabel}_start" -> loadavg1())
-      val rep = ordered.zipWithIndex.map { case (name, i) =>
+      val counted = ordered.zipWithIndex.map { case (name, i) =>
         if (i > 0 && i % 16 == 0) loadSamples += (s"${repLabel}_q$i" -> loadavg1())
-        name -> timeOne(name)
+        val c0 = compileCount.getCount
+        val t = timeOne(name)
+        (name -> t, name -> (compileCount.getCount - c0))
       }
+      val rep = counted.map(_._1)
+      compiles(repLabel) = counted.map(_._2)
       loadSamples += (s"${repLabel}_end" -> loadavg1())
       graft.ext.Dedup.releaseCaches()
       spark.catalog.clearCache()
@@ -464,6 +479,8 @@ object Bench {
     spark.catalog.clearCache()
 
     def jmap(xs: Seq[(String, Double)]): String = timer.json(xs)
+    def jcounts(rep: String): String =
+      compiles(rep).map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val total = timer.total(finalSteady)
     val totalCold = timer.total(rep1)
     val chainSteady = timer.total(chainHealed)
@@ -488,7 +505,7 @@ object Bench {
     // line first, persist it to bench.json for the judge, and end with a
     // COMPACT total line that always fits the tail window whole.
     val full =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","total_cold":${r3(totalCold)},"total_steady":${r3(total)},"total_rep2":${r3(totalRep2)},"reps":2,"steady_def":"per-query min over reps","chain_steady":${r3(chainSteady)},"ingest_eps":${eps.round},"ingest_eps_rep1":${eps1.round},"ingest_eps_rep2":${eps2.round},"queries":${jmap(finalSteady)},"queries_rep1":${jmap(rep1)},"queries_rep2":${jmap(rep2)},"queries_retimed":${jmap(allRetimed)},"queries_floor_preheal":${jmap(floorPreheal)},"queries_floor_pass":${jmap(floorPass)},"queries_standalone_preheal":${jmap(standaloneFlagged)},"chain":${jmap(chainHealed)},"chain_preheal":${jmap(chain)},"chain_retimed":${jmap(chainRetimed)},"chain_rep1":${jmap(chain1)},"chain_rep2":${jmap(chain2)},"chain_heal":${jmap(heal)},"loadavg":${jmap(loadSamples.toSeq)},"failed":${timer.failedJson},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","total_cold":${r3(totalCold)},"total_steady":${r3(total)},"total_rep2":${r3(totalRep2)},"reps":2,"steady_def":"per-query min over reps","chain_steady":${r3(chainSteady)},"ingest_eps":${eps.round},"ingest_eps_rep1":${eps1.round},"ingest_eps_rep2":${eps2.round},"queries":${jmap(finalSteady)},"queries_rep1":${jmap(rep1)},"queries_rep2":${jmap(rep2)},"compiles_rep1":${jcounts("rep1")},"compiles_rep2":${jcounts("rep2")},"compiles_rep2_total":${compiles("rep2").map(_._2).sum},"queries_retimed":${jmap(allRetimed)},"queries_floor_preheal":${jmap(floorPreheal)},"queries_floor_pass":${jmap(floorPass)},"queries_standalone_preheal":${jmap(standaloneFlagged)},"chain":${jmap(chainHealed)},"chain_preheal":${jmap(chain)},"chain_retimed":${jmap(chainRetimed)},"chain_rep1":${jmap(chain1)},"chain_rep2":${jmap(chain2)},"chain_heal":${jmap(heal)},"loadavg":${jmap(loadSamples.toSeq)},"failed":${timer.failedJson},"sf":"$sfDir"}"""
     println(full)
     try java.nio.file.Files.writeString(java.nio.file.Paths.get("bench.json"), full + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] bench.json write failed: $e") }

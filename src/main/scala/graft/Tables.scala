@@ -8,9 +8,10 @@ import org.apache.spark.sql.functions._
   *
   * All loads go through [[Tables.load]] so every query sees the same
   * conventions: column pruning + predicate pushdown are left to Catalyst,
-  * the only thing kept between loads is each table file's schema (never
-  * a frame or its rows), and the temp-view registration is idempotent
-  * so `spark.sql` text queries can refer to tables by name.
+  * the only things kept between loads are each table file's schema and
+  * the dir's execution mode (never a frame or its rows), and the
+  * temp-view registration is idempotent so `spark.sql` text queries can
+  * refer to tables by name.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -33,9 +34,13 @@ object Tables {
     * stopped context or `releaseCaches` drops the entry. Every call
     * still builds a fresh relation (fresh attribute ids), so self-joins
     * behave as with a plain read.
+    *
+    * Every load also sets the session's execution mode for the dir (see
+    * [[codegenMode]]).
     */
   def load(spark: SparkSession, sfDir: String, table: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.codegen.factoryMode", codegenMode(spark, sfDir))
     val path = s"$sfDir/$table.parquet"
     val schema = graft.ext.Dedup.Frames.getOrComputeValue(spark,
         s"schema:$table:$sfDir", sfDir, Seq(s"$table.parquet")) {
@@ -46,6 +51,61 @@ object Tables {
       df.withColumn("ts", expr("timestamp_micros(ts div 1000)").cast("timestamp_ntz"))
     else df
   }
+
+  /** The largest table file a data dir may hold and still run
+    * interpreted: 4 MiB.
+    *
+    * A small query over small tables spends more driver time compiling
+    * generated Java than running it; interpreting wins until the rows
+    * outweigh the compile (the trade of Kohn, Leis & Neumann, "Adaptive
+    * Execution of Compiled Queries", ICDE 2018). One pass over the 57
+    * non-`x_` queries on a 4-core box (`graft.tools.TimeMany`, two
+    * passes per side; BASELINE.md "Small-dir interpreted execution"),
+    * compiled vs interpreted:
+    *
+    *   - sf0.001 (largest file 194 KB): ~660 vs 55 Janino compiles,
+    *     35.5 → 21.4 s;
+    *   - sf0.01 (1.04 MB): 33.2 → 24.5 s;
+    *   - sf0.1 (10.8 MB): 51.3 → 55.1 s, a loss (`q17_stats_aggs`
+    *     0.60 → 5.47 s).
+    *
+    * The bound sits between sf0.01 and sf0.1, so sf0.1 and anything
+    * larger keep compiled plans by construction.
+    */
+  private[graft] val InterpretedMaxBytes: Long = 4L << 20
+
+  /** The `spark.sql.codegen.factoryMode` for a data dir: `NO_CODEGEN`
+    * when every table entry in `sfDir` is a plain file under
+    * [[InterpretedMaxBytes]], else `FALLBACK` (Spark's default). A
+    * directory-shaped table (a multi-file production layout) counts as
+    * large, whatever its entry reports as length.
+    *
+    * `NO_CODEGEN` makes Spark build every projection, predicate and
+    * ordering interpreted, and it also turns `CollapseCodegenStages`
+    * off, so no whole-stage code is generated. Classes without an
+    * interpreted form still compile (55 on the pass above).
+    * Spark marks `factoryMode` as internal: it exists so Spark's own
+    * expression tests can run both paths. The engine's specs pin each
+    * mode in turn for the same reason (CodegenModeSpec).
+    *
+    * The decision is memoized in [[graft.ext.Dedup.Frames]] under
+    * `codegen:<dir>`, stamped with one listing of the whole dir, so a
+    * load adds one filesystem call and a rewritten file, a stopped
+    * context or `releaseCaches` drops the entry. The mode is a session
+    * setting: the last load decides, so one session reading a small
+    * and a large dir in concurrent queries runs both in the mode of
+    * whichever it loaded last.
+    */
+  private def codegenMode(spark: SparkSession, sfDir: String): String =
+    graft.ext.Dedup.Frames.getOrComputeValue(spark, s"codegen:$sfDir", sfDir, Nil) {
+      val dir = new org.apache.hadoop.fs.Path(sfDir)
+      val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+      val tables =
+        try fs.listStatus(dir).filter(_.getPath.getName.endsWith(".parquet")).toSeq
+        catch { case _: java.io.FileNotFoundException => Nil }
+      if (tables.forall(s => s.isFile && s.getLen < InterpretedMaxBytes)) "NO_CODEGEN"
+      else "FALLBACK"
+    }
 
   /** Scan-parallelism floor for CPU-HEAVY consumers only (round 21,
     * guide §2.5 "input skew: repartition immediately after the read" +

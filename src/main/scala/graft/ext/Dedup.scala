@@ -65,22 +65,24 @@ object Dedup {
       * listing (name:length:mtime per file) of exactly the tables the
       * KEY reads (review r12: a blanket two-table listing invalidated
       * every document-side frame on an embedding rewrite and doubled
-      * the FS round-trips). One directory level, which any flat parquet
-      * write touches; a hive-partitioned layout with nested
-      * subdirectories would need a recursive listing, at which point
-      * fingerprint the partition dirs' mtimes instead of walking every
-      * leaf file.
+      * the FS round-trips); no tables means the whole dir, one listing.
+      * One directory level, which any flat parquet write touches; a
+      * hive-partitioned layout with nested subdirectories would need a
+      * recursive listing, at which point fingerprint the partition dirs'
+      * mtimes instead of walking every leaf file.
       */
     private def fingerprint(spark: SparkSession, dir: String,
-        tables: Seq[String]): String =
-      tables.map { t =>
-        val p = new org.apache.hadoop.fs.Path(dir, t)
-        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-        if (!fs.exists(p)) "absent"
-        else fs.listStatus(p).sortBy(_.getPath.getName)
+        tables: Seq[String]): String = {
+      val root = new org.apache.hadoop.fs.Path(dir)
+      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+      def listing(p: org.apache.hadoop.fs.Path): String =
+        try fs.listStatus(p).sortBy(_.getPath.getName)
           .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
           .mkString("|")
-      }.mkString("||")
+        catch { case _: java.io.FileNotFoundException => "absent" }
+      if (tables.isEmpty) listing(root)
+      else tables.map(t => listing(new org.apache.hadoop.fs.Path(dir, t))).mkString("||")
+    }
 
     /** The entry's frame, if it holds one (values hold anything else). */
     private def frame(v: Any): Option[DataFrame] = v match {
@@ -92,6 +94,21 @@ object Dedup {
       frame(v).filterNot(_.sparkSession.sparkContext.isStopped)
         .foreach(_.unpersist(blocking = false))
 
+    private def cacheEntry(df: DataFrame) =
+      df.sparkSession.sharedState.cacheManager
+        .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+
+    /** Whether another key's frame reads the same CacheManager entry as
+      * `v`: two keys that build one plan share it, so dropping one key
+      * must not unpersist the other's data. Callers hold the lock.
+      */
+    private def shared(spark: SparkSession, key: String, v: Any): Boolean =
+      frame(v).flatMap(cacheEntry).exists { e =>
+        memo.exists { case (k, (_, o)) =>
+          k != ((spark, key)) && frame(o).flatMap(cacheEntry).exists(_ eq e)
+        }
+      }
+
     /** The entry under `key` iff it was stamped with `fp`. Drops the
       * entries of stopped contexts (they hold no cached blocks) and a
       * stale entry for `key` (its corpus changed under the store).
@@ -101,7 +118,11 @@ object Dedup {
       memo.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
       memo.get((spark, key)).flatMap { case (oldFp, v) =>
         if (oldFp == fp) Some(v)
-        else { unpersist(v); memo.remove((spark, key)); None }
+        else {
+          if (!shared(spark, key, v)) unpersist(v)
+          memo.remove((spark, key))
+          None
+        }
       }
     }
 
@@ -124,7 +145,10 @@ object Dedup {
         fresh(spark, key, fp).flatMap(frame) match {
           case Some(df) => (df, rearmed(df))
           case None =>
-            val df = build.persist()
+            // trackPersist's rule: a plan the CacheManager already holds
+            // (another key built the same plan) already reads that entry
+            val df = build
+            if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) df.persist()
             memo.put((spark, key), (fp, df))
             (df, true)
         }

@@ -2,7 +2,8 @@ package graft.tools
 
 /** Dev tool: time several queries once each in one JVM (mirrors the
   * bench loop, including cache clearing); repeat a name to time it
-  * again in the same JVM. Usage:
+  * again in the same JVM. Prints each query's wall and the Janino
+  * compiles it started, then the totals. Usage:
   *   runMain graft.tools.TimeMany <q1,q2,...> [sfDir]
   */
 object TimeMany {
@@ -15,6 +16,9 @@ object TimeMany {
     // same warmup as Bench
     graft.SparkEntry.queries("q1_pricing_summary")(spark, graft.Bench.warmDir(dir))
       .write.format("noop").mode("overwrite").save()
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val c0 = compiles.getCount
+    var wall = 0.0
     names.foreach { q =>
       // same keep-warm rule as Bench: clusters/apply consume the pair
       // frame the preceding ngram entry built
@@ -22,10 +26,13 @@ object TimeMany {
         spark.catalog.clearCache()
         System.gc()
       }
-      val t0 = System.nanoTime()
+      val (c, t0) = (compiles.getCount, System.nanoTime())
       graft.SparkEntry.queries(q)(spark, dir).write.format("noop").mode("overwrite").save()
-      println(f"[timemany] $q: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      val sec = (System.nanoTime() - t0) / 1e9
+      wall += sec
+      println(f"[timemany] $q: $sec%.2f s, ${compiles.getCount - c} compiles")
     }
+    println(f"[timemany] total: $wall%.2f s, ${compiles.getCount - c0} compiles")
     spark.stop()
   }
 }

@@ -3727,11 +3727,15 @@ class ExtSpec extends SparkSpec {
     val first = Similarity.seedCentroids(e, 16)
     val second = Similarity.seedCentroids(e, 37)
     val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
-    assignedRows(Similarity.assignCells(e, first))
-    val before = compiles.getCount
-    val got = assignedRows(Similarity.assignCells(e, second))
-    assert(compiles.getCount == before,
-      s"${compiles.getCount - before} Janino compile(s) for a new centroid set")
+    // sf0.001 runs interpreted, where no compile would be seen at all
+    val got = withCodegenMode("FALLBACK") {
+      assignedRows(Similarity.assignCells(e, first))
+      val before = compiles.getCount
+      val rows = assignedRows(Similarity.assignCells(e, second))
+      assert(compiles.getCount == before,
+        s"${compiles.getCount - before} Janino compile(s) for a new centroid set")
+      rows
+    }
     assert(got.map(_._2).distinct.length > 16, "the second set must actually be used")
   }
 

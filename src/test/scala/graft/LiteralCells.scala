@@ -34,11 +34,6 @@ object LiteralCells {
     * split per-expression projections compute the same values without
     * a failed compile.
     */
-  def unfused[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.codegen.wholeStage"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try body
-    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
+  def unfused[T](spark: SparkSession)(body: => T): T =
+    SparkSpec.withConf(spark, "spark.sql.codegen.wholeStage", "false")(body)
 }

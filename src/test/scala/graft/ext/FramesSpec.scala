@@ -62,9 +62,30 @@ class FramesSpec extends graft.SparkSpec {
     jobs.get
   }
 
+  /** The messages Spark logs at WARN or above while `body` runs. */
+  private def warningsOf(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("frames-spec", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(org.apache.logging.log4j.Level.WARN))
+          seen.add(e.getMessage.getFormattedMessage)
+    }
+    val root = org.apache.logging.log4j.LogManager.getRootLogger.asInstanceOf[Logger]
+    appender.start()
+    root.addAppender(appender)
+    try body
+    finally { root.removeAppender(appender); appender.stop() }
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq
+  }
+
   test("memo invalidation is scoped to the key's declared tables") {
     val tmp = tempCopy("documents.parquet", "embeddings.parquet")
     val dir = tmp.toString
+    val cachedBefore = org.apache.spark.sql.CachedEntries.count(spark)
     var docBuilds = 0
     def docFrame = Dedup.Frames.getOrCompute(spark, s"spec_doc:$dir", dir) {
       docBuilds += 1; spark.range(1).toDF("x")
@@ -74,18 +95,30 @@ class FramesSpec extends graft.SparkSpec {
         tables = Seq("embeddings.parquet")) {
       embBuilds += 1; spark.range(1).toDF("x")
     }
-    docFrame; docFrame; embFrame; embFrame
-    assert(docBuilds == 1 && embBuilds == 1, "second access must hit the memo")
+    // both keys build the same plan, so they share one CacheManager
+    // entry: neither may persist it twice, nor drop it under the other
+    val warnings = warningsOf {
+      docFrame; docFrame; embFrame; embFrame
+      assert(docBuilds == 1 && embBuilds == 1, "second access must hit the memo")
+      docFrame.count()
+      val filled = spark.sparkContext.getPersistentRDDs.keySet
 
-    touch(tmp, "embeddings.parquet")
-    docFrame; embFrame
-    assert(docBuilds == 1, "an embeddings rewrite must NOT invalidate a document-scoped frame")
-    assert(embBuilds == 2, "an embeddings rewrite MUST invalidate an embeddings-scoped frame")
+      touch(tmp, "embeddings.parquet")
+      docFrame; embFrame
+      assert(filled.subsetOf(spark.sparkContext.getPersistentRDDs.keySet),
+        "an embeddings rewrite must not drop the data the document-scoped key still holds")
+      assert(docBuilds == 1, "an embeddings rewrite must NOT invalidate a document-scoped frame")
+      assert(embBuilds == 2, "an embeddings rewrite MUST invalidate an embeddings-scoped frame")
 
-    touch(tmp, "documents.parquet")
-    docFrame; embFrame
-    assert(docBuilds == 2, "a documents rewrite must invalidate the document-scoped frame")
-    assert(embBuilds == 2, "a documents rewrite must not touch the embeddings-scoped frame")
+      touch(tmp, "documents.parquet")
+      docFrame; embFrame
+      assert(docBuilds == 2, "a documents rewrite must invalidate the document-scoped frame")
+      assert(embBuilds == 2, "a documents rewrite must not touch the embeddings-scoped frame")
+    }
+    assert(org.apache.spark.sql.CachedEntries.count(spark) == cachedBefore + 1,
+      "two keys over one plan must add one CacheManager entry")
+    assert(docFrame.storageLevel != StorageLevel.NONE && embFrame.storageLevel != StorageLevel.NONE)
+    assert(!warnings.exists(_.contains("Asked to cache already cached data")), warnings)
   }
 
   test("one store: a widen decision is one entry per (dir, table); release empties the store") {
