@@ -238,7 +238,7 @@ object Bench {
     // (CodegenFallback expressions and TypedImperativeAggregates JIT on
     // first execution — measured 8.5 s -> 2-4 s on x_dedup_minhash at
     // sf0.1 between a JVM's first and second run). The sf0.001 sibling
-    // runs interpreted (Tables.InterpretedMaxBytes), so the warm-up JITs
+    // runs interpreted (Tables.SmallDirMaxBytes), so the warm-up JITs
     // the interpreted path and leaves a compiled dir's first compiles
     // to rep 1; the per-query min over reps keeps them out of steady.
     Seq("q1_pricing_summary", "x_dedup_minhash").foreach { name =>

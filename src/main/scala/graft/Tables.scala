@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * All loads go through [[Tables.load]] so every query sees the same
   * conventions: column pruning + predicate pushdown are left to Catalyst,
   * the only things kept between loads are each table file's schema and
-  * the dir's execution mode (never a frame or its rows), and the
+  * the dir's size decision (never a frame or its rows), and the
   * temp-view registration is idempotent so `spark.sql` text queries can
   * refer to tables by name.
   */
@@ -35,33 +35,34 @@ object Tables {
     * still builds a fresh relation (fresh attribute ids), so self-joins
     * behave as with a plain read.
     *
-    * Every load also sets the session's execution mode for the dir (see
-    * [[codegenMode]]).
+    * Every load also applies the dir's size decision ([[smallDir]]): a
+    * small dir runs interpreted and its scans are single-partition.
     */
   def load(spark: SparkSession, sfDir: String, table: String): DataFrame = {
+    val small = smallDir(spark, sfDir)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.codegen.factoryMode", codegenMode(spark, sfDir))
+    spark.conf.set("spark.sql.codegen.factoryMode", if (small) "NO_CODEGEN" else "FALLBACK")
     val path = s"$sfDir/$table.parquet"
     val schema = graft.ext.Dedup.Frames.getOrComputeValue(spark,
         s"schema:$table:$sfDir", sfDir, Seq(s"$table.parquet")) {
       spark.read.parquet(path).schema
     }
-    val df = spark.read.schema(schema).parquet(path)
+    val scan = spark.read.schema(schema).parquet(path)
+    val df = if (small) scan.coalesce(1) else scan
     if (table == "events" && df.schema("ts").dataType == org.apache.spark.sql.types.LongType)
       df.withColumn("ts", expr("timestamp_micros(ts div 1000)").cast("timestamp_ntz"))
     else df
   }
 
-  /** The largest table file a data dir may hold and still run
-    * interpreted: 4 MiB.
+  /** The largest table file a small data dir may hold: 4 MiB.
     *
-    * A small query over small tables spends more driver time compiling
-    * generated Java than running it; interpreting wins until the rows
-    * outweigh the compile (the trade of Kohn, Leis & Neumann, "Adaptive
-    * Execution of Compiled Queries", ICDE 2018). One pass over the 57
-    * non-`x_` queries on a 4-core box (`graft.tools.TimeMany`, two
-    * passes per side; BASELINE.md "Small-dir interpreted execution"),
-    * compiled vs interpreted:
+    * Below it a query's fixed driver cost (code generation, Spark jobs
+    * and the gaps between them) outweighs the work on the rows, so a
+    * small dir runs interpreted and without shuffles (see
+    * [[smallDir]]). A pass over the
+    * 57 non-`x_` queries on a 4-core box (`graft.tools.TimeMany`;
+    * BASELINE.md "Small-dir interpreted execution"), compiled vs
+    * interpreted:
     *
     *   - sf0.001 (largest file 194 KB): ~660 vs 55 Janino compiles,
     *     35.5 → 21.4 s;
@@ -70,41 +71,66 @@ object Tables {
     *     0.60 → 5.47 s).
     *
     * The bound sits between sf0.01 and sf0.1, so sf0.1 and anything
-    * larger keep compiled plans by construction.
+    * larger keep compiled, partitioned plans by construction. It also
+    * equals Spark's default `spark.sql.files.openCostInBytes`, which
+    * floors the split size: a file under it is never split, so its
+    * scan is one partition whatever the core count.
     */
-  private[graft] val InterpretedMaxBytes: Long = 4L << 20
+  private[graft] val SmallDirMaxBytes: Long = 4L << 20
 
-  /** The `spark.sql.codegen.factoryMode` for a data dir: `NO_CODEGEN`
-    * when every table entry in `sfDir` is a plain file under
-    * [[InterpretedMaxBytes]], else `FALLBACK` (Spark's default). A
-    * directory-shaped table (a multi-file production layout) counts as
-    * large, whatever its entry reports as length.
+  /** Whether `sfDir` is a small dir: every table entry in it is a plain
+    * file under [[SmallDirMaxBytes]]. A directory-shaped table (a
+    * multi-file production layout) counts as large, whatever its entry
+    * reports as length. Both consequences are applied in [[load]].
     *
-    * `NO_CODEGEN` makes Spark build every projection, predicate and
-    * ordering interpreted, and it also turns `CollapseCodegenStages`
-    * off, so no whole-stage code is generated. Classes without an
-    * interpreted form still compile (55 on the pass above).
-    * Spark marks `factoryMode` as internal: it exists so Spark's own
-    * expression tests can run both paths. The engine's specs pin each
-    * mode in turn for the same reason (CodegenModeSpec).
+    * Interpreted execution: a small dir sets
+    * `spark.sql.codegen.factoryMode` to `NO_CODEGEN`, any other dir to
+    * `FALLBACK` (Spark's default). `NO_CODEGEN` makes Spark build every
+    * projection, predicate and ordering interpreted, and it also turns
+    * `CollapseCodegenStages` off, so no whole-stage code is generated
+    * (the trade of Kohn, Leis & Neumann, "Adaptive Execution of
+    * Compiled Queries", ICDE 2018). Classes without an interpreted form
+    * still compile (55 on the pass above). Spark marks `factoryMode` as
+    * internal: it exists so Spark's own expression tests can run both
+    * paths. The engine's specs pin each mode in turn for the same
+    * reason (CodegenModeSpec). The mode is a session setting: the last
+    * load decides, so one session reading a small and a large dir in
+    * concurrent queries runs both in the mode of whichever it loaded
+    * last.
+    *
+    * Single-partition scans: a small dir's scan is returned as
+    * `coalesce(1)`. Its file is one split (see [[SmallDirMaxBytes]]),
+    * so the coalesce moves no row: it is the identity on the data. What
+    * it changes is the physical plan. `CoalesceExec(1)` reports
+    * `SinglePartition`, which satisfies every clustered, ordered and
+    * all-tuples requirement, so `EnsureRequirements` inserts no shuffle
+    * above it: aggregates, windows, sort-merge joins and the final
+    * total `ORDER BY` run inside the result stage, with no exchange, no
+    * range-sampling job and no AQE stage boundary (AQE would have
+    * coalesced each of those shuffles back to one task anyway).
+    * Broadcast exchanges and subqueries stay as they are, and Catalyst
+    * pushes filters and column pruning through the coalesce to the
+    * scan. Unlike the session-wide mode, the coalesce belongs to the
+    * frame, so a concurrent large load keeps its partitioned plan.
+    * Measured on a 4-core box (BASELINE.md "Single-partition small-dir
+    * scans"): a pass over the 57 non-`x_` queries runs 246 → 109 Spark
+    * jobs at sf0.001; a traced `panel` op runs 5.3 → 2.9 jobs and its
+    * shuffle writes fall to about zero; `panel` throughput rises
+    * 2.49 → 3.02 ops/s (10 of 10 pairs).
     *
     * The decision is memoized in [[graft.ext.Dedup.Frames]] under
-    * `codegen:<dir>`, stamped with one listing of the whole dir, so a
+    * `small:<dir>`, stamped with one listing of the whole dir, so a
     * load adds one filesystem call and a rewritten file, a stopped
-    * context or `releaseCaches` drops the entry. The mode is a session
-    * setting: the last load decides, so one session reading a small
-    * and a large dir in concurrent queries runs both in the mode of
-    * whichever it loaded last.
+    * context or `releaseCaches` drops the entry.
     */
-  private def codegenMode(spark: SparkSession, sfDir: String): String =
-    graft.ext.Dedup.Frames.getOrComputeValue(spark, s"codegen:$sfDir", sfDir, Nil) {
+  private def smallDir(spark: SparkSession, sfDir: String): Boolean =
+    graft.ext.Dedup.Frames.getOrComputeValue(spark, s"small:$sfDir", sfDir, Nil) {
       val dir = new org.apache.hadoop.fs.Path(sfDir)
       val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
       val tables =
         try fs.listStatus(dir).filter(_.getPath.getName.endsWith(".parquet")).toSeq
         catch { case _: java.io.FileNotFoundException => Nil }
-      if (tables.forall(s => s.isFile && s.getLen < InterpretedMaxBytes)) "NO_CODEGEN"
-      else "FALLBACK"
+      tables.forall(s => s.isFile && s.getLen < SmallDirMaxBytes)
     }
 
   /** Scan-parallelism floor for CPU-HEAVY consumers only (round 21,

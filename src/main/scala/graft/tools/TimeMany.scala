@@ -2,8 +2,8 @@ package graft.tools
 
 /** Dev tool: time several queries once each in one JVM (mirrors the
   * bench loop, including cache clearing); repeat a name to time it
-  * again in the same JVM. Prints each query's wall and the Janino
-  * compiles it started, then the totals. Usage:
+  * again in the same JVM. Prints each query's wall, the Spark jobs it
+  * ran and the Janino compiles it started, then the totals. Usage:
   *   runMain graft.tools.TimeMany <q1,q2,...> [sfDir]
   */
 object TimeMany {
@@ -17,6 +17,13 @@ object TimeMany {
     graft.SparkEntry.queries("q1_pricing_summary")(spark, graft.Bench.warmDir(dir))
       .write.format("noop").mode("overwrite").save()
     val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    })
     val c0 = compiles.getCount
     var wall = 0.0
     names.foreach { q =>
@@ -26,13 +33,14 @@ object TimeMany {
         spark.catalog.clearCache()
         System.gc()
       }
-      val (c, t0) = (compiles.getCount, System.nanoTime())
+      val (c, j, t0) = (compiles.getCount, jobs.get, System.nanoTime())
       graft.SparkEntry.queries(q)(spark, dir).write.format("noop").mode("overwrite").save()
       val sec = (System.nanoTime() - t0) / 1e9
       wall += sec
-      println(f"[timemany] $q: $sec%.2f s, ${compiles.getCount - c} compiles")
+      org.apache.spark.ListenerBusDrain(sc)
+      println(f"[timemany] $q: $sec%.2f s, ${jobs.get - j} jobs, ${compiles.getCount - c} compiles")
     }
-    println(f"[timemany] total: $wall%.2f s, ${compiles.getCount - c0} compiles")
+    println(f"[timemany] total: $wall%.2f s, ${jobs.get} jobs, ${compiles.getCount - c0} compiles")
     spark.stop()
   }
 }

@@ -4,7 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.execution.{CoalesceExec, ColumnarToRowExec, FileSourceScanExec, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
@@ -12,10 +13,11 @@ import graft.ext.{Dedup, Similarity}
 import graft.functions.GraftFunctions
 
 /** The two execution paths and the gate between them. `Tables.load`
-  * runs a dir of small tables interpreted (`NO_CODEGEN`) and any other
-  * dir compiled (`FALLBACK`), so the specs, which read sf0.001, run
-  * interpreted by default; these pin each mode in turn to keep the
-  * compiled path under test.
+  * runs a dir of small tables interpreted (`NO_CODEGEN`) over
+  * single-partition scans and any other dir compiled (`FALLBACK`) over
+  * partitioned ones, so the specs, which read sf0.001, take the small
+  * path by default; these pin each mode in turn to keep the compiled
+  * path under test, and check both plan shapes.
   */
 class CodegenModeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
@@ -98,6 +100,25 @@ class CodegenModeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(n <= 4, s"$n Janino compiles for one interpreted panel query")
   }
 
+  private def exchanges(df: DataFrame): Seq[Exchange] =
+    collect(df.queryExecution.executedPlan) { case e: Exchange => e }
+
+  test("a load from sf0.001 scans single-partition: a panel query plans no exchange and runs in one job") {
+    def q1(d: String) = SparkEntry.queries("q1_pricing_summary")(spark, d)
+    val rows = q1(dir).collect().toSeq // warms the schema memo
+    assert(rows.nonEmpty)
+    val q = q1(dir)
+    assert(exchanges(q).isEmpty, s"a small dir's panel query must plan no exchange:\n${q.queryExecution.executedPlan}")
+    var again = Seq.empty[Row]
+    val jobs = jobsOf { again = q1(dir).collect().toSeq }
+    assert(jobs == 1, s"$jobs Spark jobs for one small-dir panel query")
+    assert(again == rows)
+    // the same files in the production layout keep the partitioned plan
+    val scale = q1(SparkSpec.scaleLayout(dir))
+    assert(exchanges(scale).nonEmpty, "a large dir's panel query must keep its exchanges")
+    assert(scale.collect().toSeq == rows)
+  }
+
   test("a load from sf0.1 runs compiled") {
     Tables.load(spark, sf01, "region")
     assert(spark.conf.get(modeKey) == "FALLBACK")
@@ -106,10 +127,23 @@ class CodegenModeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("one codegen decision per dir: a changed dir replaces it, a directory-shaped table counts as large, release drops it") {
-    def codegenKeys = Dedup.Frames.residentKeys(spark).filter(_.startsWith("codegen:"))
+    def decisionKeys = Dedup.Frames.residentKeys(spark).filter(_.startsWith("small:"))
+    def coalesces(df: DataFrame) =
+      collect(df.queryExecution.executedPlan) { case c: CoalesceExec => c }
     Dedup.releaseCaches()
-    Tables.orders(spark, dir); Tables.lineitem(spark, dir); Tables.region(spark, sf01)
-    assert(codegenKeys == Set(s"codegen:$dir", s"codegen:$sf01"), "one entry per dir")
+    Tables.names.foreach { t =>
+      val c = coalesces(Tables.load(spark, dir, t))
+      // a vectorized scan reaches row operators through ColumnarToRow
+      val overScan = c.headOption.map(_.child).exists {
+        case ColumnarToRowExec(_: FileSourceScanExec) | _: FileSourceScanExec => true
+        case _ => false
+      }
+      assert(c.length == 1 && c.head.numPartitions == 1 && overScan,
+        s"$t: a small dir's load must plan one Coalesce 1 directly over its scan: $c")
+    }
+    Tables.region(spark, sf01)
+    assert(decisionKeys == Set(s"small:$dir", s"small:$sf01"), "one entry per dir")
+    assert(coalesces(Tables.region(spark, sf01)).isEmpty, "a large dir's scan must stay partitioned")
 
     val tmp = Files.createTempDirectory("graft_codegen")
     Files.copy(Paths.get(s"$dir/orders.parquet"), tmp.resolve("orders.parquet"))
@@ -119,12 +153,13 @@ class CodegenModeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // directory entry, but may hold any amount of data
     Files.createDirectory(tmp.resolve("lineitem.parquet"))
     Files.copy(Paths.get(s"$dir/lineitem.parquet"), tmp.resolve("lineitem.parquet/part-0.parquet"))
-    Tables.orders(spark, tmp.toString)
+    assert(coalesces(Tables.orders(spark, tmp.toString)).isEmpty,
+      "a directory-shaped table must make its dir's scans partitioned")
     assert(spark.conf.get(modeKey) == "FALLBACK", "a directory-shaped table must run compiled")
-    assert(codegenKeys == Set(s"codegen:$dir", s"codegen:$sf01", s"codegen:$tmp"),
-      s"a changed dir must replace its decision, not add one: $codegenKeys")
+    assert(decisionKeys == Set(s"small:$dir", s"small:$sf01", s"small:$tmp"),
+      s"a changed dir must replace its decision, not add one: $decisionKeys")
 
     Dedup.releaseCaches()
-    assert(codegenKeys.isEmpty, "release must drop every codegen decision")
+    assert(decisionKeys.isEmpty, "release must drop every codegen decision")
   }
 }

@@ -22,6 +22,12 @@ import org.apache.spark.sql.functions._
   *      presentation `orderBy` (a RANGE-partitioned distributed sort,
   *      not a single-partition funnel).
   *
+  * Check 3 (over the registry and the filter-funnel subtrees) reads
+  * its plans from [[SparkSpec.scaleLayout]], the same sf0.001 files in
+  * the production layout: `Tables` scans a small dir single-partition
+  * by design (`Tables.smallDir`), so only the layout a large dir gets
+  * shows what a query itself forces.
+  *
   * A new query that accidentally plans either fails this suite with its
   * name — the regression is caught at `sbt test` time, not in a 100 TB
   * run. Allowlists below are per-query and each entry carries the reason
@@ -70,8 +76,8 @@ class PlanLintSpec extends SparkSpec {
     */
   private val globalWindowAllowed: Map[String, String] = Map.empty
 
-  private def plans(name: String): (String, Seq[LogicalWindow]) = {
-    val qe = SparkEntry.queries(name)(spark, dir).queryExecution
+  private def plans(name: String, d: String = dir): (String, Seq[LogicalWindow]) = {
+    val qe = SparkEntry.queries(name)(spark, d).queryExecution
     val windows = qe.optimizedPlan.collect { case w: LogicalWindow => w }
     (qe.executedPlan.toString, windows)
   }
@@ -109,7 +115,7 @@ class PlanLintSpec extends SparkSpec {
   private val singlePartitionAllowed: Map[String, String] = Map.empty
 
   private def plansForcedSinglePartition(name: String): Boolean = {
-    val (physical, _) = plans(name)
+    val (physical, _) = plans(name, SparkSpec.scaleLayout(dir))
     // `Exchange SinglePartition, REPARTITION…` = user-forced (the
     // planner's own one-partition exchanges print ENSURE_REQUIREMENTS);
     // `Coalesce 1` is the coalesce(1) physical node (`\b` keeps
@@ -130,6 +136,11 @@ class PlanLintSpec extends SparkSpec {
       s"fixture expectation drifted: $agg")
     assert(!agg.contains("Exchange SinglePartition, REPARTITION"))
     assert("Coalesce 1\\b".r.findFirstIn(physical(base.coalesce(10))).isEmpty)
+    // on the scale layout a table's own scan plans no coalesce, and a
+    // query-authored coalesce(1) over it still trips
+    val scan = graft.Tables.lineitem(spark, SparkSpec.scaleLayout(dir))
+    assert("Coalesce 1\\b".r.findFirstIn(physical(scan)).isEmpty, physical(scan))
+    assert("Coalesce 1\\b".r.findFirstIn(physical(scan.coalesce(1))).isDefined)
   }
 
   test("no registered query forces a single-partition exchange (repartition(1)/coalesce(1))") {
@@ -247,8 +258,8 @@ class PlanLintSpec extends SparkSpec {
     // registered face is the same driver-side assembly, so lint its
     // pre-collect frame too
     for ((label, frame) <- Seq(
-        "filter-funnel" -> graft.ext.Dedup.filterFunnelHeavyFrame(spark, dir),
-        "funnel-orders" -> graft.ext.Dedup.funnelOrdersHeavyFrame(spark, dir))) {
+        "filter-funnel" -> graft.ext.Dedup.filterFunnelHeavyFrame(spark, SparkSpec.scaleLayout(dir)),
+        "funnel-orders" -> graft.ext.Dedup.funnelOrdersHeavyFrame(spark, SparkSpec.scaleLayout(dir)))) {
       val qe = frame.queryExecution
       val physical = qe.executedPlan.toString
       assert(!physical.contains("CartesianProduct") &&

@@ -41,13 +41,16 @@ class PlanSpec extends SparkSpec {
   }
 
   test("custom AsOfJoinExec plans via the injected strategy and matches the other formulations") {
-    val df = LogQueries.eventsAsofOrdersExec(spark, dir)
-    val physical = df.queryExecution.executedPlan.toString
+    // the scale layout: a small dir's single-partition scans already
+    // satisfy the join's clustering, so only a large dir shows exchanges
+    val physical = LogQueries.eventsAsofOrdersExec(spark, SparkSpec.scaleLayout(dir))
+      .queryExecution.executedPlan.toString
     // SparkPlan.nodeName strips the Exec suffix, so the node prints as
     // "AsOfJoin" in the PHYSICAL plan (with the hash exchanges + sorts
     // EnsureRequirements added around it)
     assert(physical.contains("AsOfJoin"), s"custom exec not planned:\n$physical")
     assert(physical.contains("Exchange hashpartitioning"), "expected co-partitioning exchanges")
+    val df = LogQueries.eventsAsofOrdersExec(spark, dir)
     // bigint key + timestamp times take the boxing-free primitive merge
     val root = df.queryExecution.executedPlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan

@@ -2,7 +2,6 @@ package graft.ext
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.LongType
@@ -36,30 +35,6 @@ class FramesSpec extends graft.SparkSpec {
     // mtime participates in the fingerprint; jump it far enough that
     // coarse-grained filesystems can't collapse the change
     assert(f.setLastModified(f.lastModified() + 60000))
-  }
-
-  /** Spark jobs `body` starts on this thread, counted by a listener once
-    * the listener bus is drained.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"frames_spec_${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "FramesSpec job count")
-    try body
-    finally {
-      sc.clearJobGroup()
-      org.apache.spark.ListenerBusDrain(sc)
-      sc.removeSparkListener(listener)
-    }
-    jobs.get
   }
 
   /** The messages Spark logs at WARN or above while `body` runs. */
@@ -217,5 +192,58 @@ class FramesSpec extends graft.SparkSpec {
     assert(ts.toSeq == Seq("2024-12-04T11:00:00.123456", "2024-12-04T11:01:00.999999",
       "1970-01-01T00:00").map(java.time.LocalDateTime.parse), ts.toSeq)
     Dedup.releaseCaches()
+  }
+
+  test("a lazily armed persist read by two concurrent jobs is built once: the second reader waits") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val rows = 200L
+    FramesSpec.Build.reset()
+    val counted = org.apache.spark.sql.functions.udf { (x: Long) =>
+      FramesSpec.Build.row(); x
+    }.asNondeterministic()
+    val df = Dedup.Frames.trackPersist(
+      spark.range(0, rows, 1, 1).select(counted(org.apache.spark.sql.functions.col("id")).as("id")))
+    try {
+      val first = Future(df.count())
+      assert(FramesSpec.Build.started.await(60, SECONDS), "the first reader never started the build")
+      // the first reader holds the block's write lock inside the build;
+      // a second job reading the same unfilled partition starts now
+      val second = Future(df.count())
+      Thread.sleep(500)
+      FramesSpec.Build.release.countDown()
+      assert(Await.result(first, 60.seconds) == rows && Await.result(second, 60.seconds) == rows)
+      assert(FramesSpec.Build.built.get == rows,
+        s"${FramesSpec.Build.built.get} rows built for a $rows-row persist read by two jobs")
+      assert(df.count() == rows && FramesSpec.Build.built.get == rows, "a later read must hit the block")
+    } finally {
+      FramesSpec.Build.release.countDown()
+      Dedup.releaseCaches()
+    }
+  }
+}
+
+object FramesSpec {
+  /** Counts the rows a persisted frame's build computes, and holds the
+    * build at its first row until `release` (executor threads of the
+    * local session share this object).
+    */
+  object Build {
+    @volatile var started = new java.util.concurrent.CountDownLatch(1)
+    @volatile var release = new java.util.concurrent.CountDownLatch(1)
+    val built = new java.util.concurrent.atomic.AtomicLong
+
+    def reset(): Unit = {
+      started = new java.util.concurrent.CountDownLatch(1)
+      release = new java.util.concurrent.CountDownLatch(1)
+      built.set(0)
+    }
+
+    def row(): Unit = {
+      started.countDown()
+      release.await(60, java.util.concurrent.TimeUnit.SECONDS)
+      built.incrementAndGet()
+    }
   }
 }
